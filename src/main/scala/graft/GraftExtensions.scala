@@ -13,7 +13,7 @@ import graft.functions.{ParsedField, RegexParse, UnescapeCString}
   * patching):
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)…
+  *   builder.withExtensions(new GraftExtensions)…  // on a SparkSession.Builder
   *   // or: spark.sql.extensions=graft.GraftExtensions
   *
   *   SELECT regex_parse(line, '^(?<host>\\S+) (?<code>\\d+)$').code,
@@ -109,8 +109,8 @@ object GraftExtensions {
   }
 
   /** Install just the optimizer rules on an existing session (idempotent).
-    * Used by the repo's own mains (Bench/Verify), whose sessions are built
-    * without `withExtensions`.
+    * Every session the repo's mains build runs it: [[Sessions.create]] for
+    * the production mains, and Bench/Verify's own builders.
     */
   def installRules(spark: org.apache.spark.sql.SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations

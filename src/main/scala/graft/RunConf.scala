@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.run.ConfPipeline
 
 /** Run a classic fluent-bit-style config on Spark:
@@ -21,16 +19,7 @@ object RunConf {
     val confPath = args(0)
     val parsersPath = args(1)
     val outDir = if (args.length > 2) args(2) else "target/conf_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-conf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create("graft-conf")
 
     val loaded = ConfPipeline.load(spark,
       Files.readString(Paths.get(confPath)),

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Grep
 import graft.route.SinkSpec
 import graft.run._
@@ -25,16 +23,7 @@ import graft.sources.TokenTable
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val workDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create("graft-pipeline")
     val metrics = GraftMetricsListener.install(spark)
     val ledger = new SnapshotLedger(workDir).init()
 

@@ -16,6 +16,32 @@ object Grep {
   final case class Regex(field: String, pattern: String) extends Rule
   final case class Exclude(field: String, pattern: String) extends Rule
 
+  /** Regex metacharacters (java.util.regex). A pattern containing none of
+    * these matches literally under unanchored find.
+    */
+  private val Meta: Set[Char] = "\\^$.|?*+()[]{}".toSet
+
+  /** `rlike` ⇔ unanchored java-regex find; for metacharacter-free patterns
+    * the search collapses to codegen'd `StartsWith`/`Contains` — identical
+    * null semantics (null input → null), no regex machinery per row. The
+    * hot headline rule `^5` becomes one `startsWith` byte compare.
+    * `$`-anchored forms are deliberately NOT folded: default-mode `$` also
+    * matches before a trailing line terminator (`"abc$"` finds in
+    * `"abc\n"`), which `endsWith` cannot mirror.
+    *
+    * Known deviation from the reference: Onigmo's `^` is a LINE anchor (it
+    * also matches right after a `\n` inside the value), while Java's
+    * default-mode `^` in `rlike` matches only at input start. The
+    * `startsWith` fold keeps the `rlike` semantics on purpose — it must
+    * not be "fixed" toward multiline, or the folded and unfolded forms of
+    * the same rule would disagree.
+    */
+  private[graft] def searchColumn(c: Column, pattern: String): Column =
+    if (pattern.nonEmpty && pattern.head == '^' && pattern.tail.forall(!Meta(_)))
+      c.startsWith(pattern.tail)
+    else if (pattern.forall(!Meta(_))) c.contains(pattern)
+    else c.rlike(pattern)
+
   /** Exact decision chain of `grep_filter_data` (`grep.c:130-205`), rules
     * in order, first decisive rule wins:
     *   - key missing (here: null column):  Regex rule → drop, Exclude → keep;
@@ -32,25 +58,6 @@ object Grep {
     * rlike → false); Exclude needs the three-way null/match/no-match
     * split, costing a second reference.
     */
-  /** Regex metacharacters (java.util.regex). A pattern containing none of
-    * these matches literally under unanchored find.
-    */
-  private val Meta: Set[Char] = "\\^$.|?*+()[]{}".toSet
-
-  /** `rlike` ⇔ unanchored java-regex find; for metacharacter-free patterns
-    * the search collapses to codegen'd `StartsWith`/`Contains` — identical
-    * null semantics (null input → null), no regex machinery per row. The
-    * hot headline rule `^5` becomes one `startsWith` byte compare.
-    * `$`-anchored forms are deliberately NOT folded: default-mode `$` also
-    * matches before a trailing line terminator (`"abc$"` finds in
-    * `"abc\n"`), which `endsWith` cannot mirror.
-    */
-  private[graft] def searchColumn(c: Column, pattern: String): Column =
-    if (pattern.nonEmpty && pattern.head == '^' && pattern.tail.forall(!Meta(_)))
-      c.startsWith(pattern.tail)
-    else if (pattern.forall(!Meta(_))) c.contains(pattern)
-    else c.rlike(pattern)
-
   def keepPredicate(rules: Seq[Rule], field: String => Column): Column =
     rules.foldRight(lit(true)) { (rule, rest) =>
       val c = field(rule.field)

@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Production cap on SRP bucket size for [[embeddingNearDupPairs]]. */
+  val DefaultMaxBucket = 1000
+
   /** Σ aᵢ·bᵢ as a sequential left fold (deterministic fp order). Fused
     * one-pass expression — the composable [[dotColumns]] is a
     * CodegenFallback higher-order function, interpreted per element;
@@ -222,7 +225,7 @@ object Similarity {
     */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, planes: Int = 8,
-                            maxBucket: Int = 1000): DataFrame = {
+                            maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val b = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("_bucket", srpBucket(col("v"), planes))
     val buckets = b

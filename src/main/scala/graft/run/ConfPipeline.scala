@@ -567,7 +567,6 @@ object ConfPipeline {
     }
   }
 
-  /** Execute the outputs (fan-out: each output sees every matching row). */
   /** Split the conf frame's optional `ts` into the flb_time (sec, nsec)
     * envelope columns every byte-format sink consumes.
     */
@@ -582,6 +581,7 @@ object ConfPipeline {
     (framed, valueCols)
   }
 
+  /** Execute the outputs (fan-out: each output sees every matching row). */
   def run(loaded: Loaded, outDir: String): Seq[(String, Long)] = {
     val cached = loaded.filtered.cache()
     try {

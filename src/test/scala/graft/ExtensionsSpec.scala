@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
-/** SQL surface via SparkSessionExtensions. Needs its own session (the
-  * shared test session has no extensions installed).
+/** SQL surface via SparkSessionExtensions, on the shared test session:
+  * the functions are registered onto it with `register` (the face for
+  * sessions built without `withExtensions`).
   */
 class ExtensionsSpec extends AnyFunSuite {
   // the shared test session already exists → use the register() face

@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Grep
@@ -15,8 +18,7 @@ import graft.sources.TokenTable
 class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def headlinePlan(withEnrich: Boolean): String = {
-    val t = TokenTable.synthetic(spark, 1000, 4)
+  private def headlineAgg(in: DataFrame, withEnrich: Boolean): DataFrame = {
     val dim = spark.range(0, 10).select(
       concat(lit("web-"), col("id").cast("string"), lit("_default")).as("pod_key"),
       col("id").as("team"))
@@ -24,8 +26,12 @@ class PlanAuditSpec extends AnyFunSuite {
       grep = Seq(Grep.Regex("code", "^5")),
       sinks = TokenTable.Sinks.map((SinkSpec.apply _).tupled),
       enrichDim = if (withEnrich) Some(dim) else None)
-    val out = Pipeline.transform(t, spec)
+    Pipeline.transform(in, spec)
       .groupBy(col("sink")).agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("s"))
+  }
+
+  private def headlinePlan(withEnrich: Boolean): String = {
+    val out = headlineAgg(TokenTable.synthetic(spark, 1000, 4), withEnrich)
     out.collect()
     out.queryExecution.executedPlan.toString
   }
@@ -51,6 +57,18 @@ class PlanAuditSpec extends AnyFunSuite {
       val shuffles = "Exchange hashpartitioning".r.findAllIn(s).size
       assert(shuffles == 1, s"expected 1 shuffle, saw $shuffles in:\n$s")
     }
+  }
+
+  test("headline agg never reads the token array: no `tokens` in the parquet ReadSchema") {
+    // the token array is the input's widest column and the agg needs only
+    // the parse, route and sum inputs — reading it would multiply scan bytes
+    val path = Files.createTempDirectory("graft-plan-audit").resolve("in").toString
+    TokenTable.synthetic(spark, 1000, 4).write.parquet(path)
+    val plan = headlineAgg(spark.read.parquet(path), withEnrich = true)
+      .queryExecution.executedPlan.toString
+    val schema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(schema.contains("n_tok"), plan)
+    assert(!schema.contains("tokens"), schema)
   }
 
   test("fixture queries prune the documents scan to doc_id only") {
