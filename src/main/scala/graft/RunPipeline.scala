@@ -75,7 +75,7 @@ object RunPipeline {
 
     val pendingBefore = ledger.pending(spec.sinks.map(_.name)).map(_.id)
     println(s"[pipeline] pending snapshots: ${pendingBefore.mkString(",")} " +
-      s"(committed work is skipped — ledger resume)")
+      s"(committed work is skipped: ledger resume)")
     val t0 = System.nanoTime()
     val commits = Pipeline.run(spark, ledger, spec, s"$workDir/out")
     val sec = (System.nanoTime() - t0) / 1e9

@@ -1,13 +1,12 @@
 package graft.run
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.conf.ConfParser
 import graft.core.Glob
 import graft.operators.{Grep, Nest, ParserFilter, RecordModifier, Scripted, Throttle}
-import graft.parsers.{ParserConfLoader, ParserDef}
-import graft.route.{Router, SinkSpec}
+import graft.parsers.ParserConfLoader
 import graft.sources.{Samplers, TailSource}
 
 /** Classic-mode pipeline config → runnable job: a fluent-bit user brings
@@ -30,7 +29,8 @@ import graft.sources.{Samplers, TailSource}
   *     Scala functions implementing the cb(tag, ts, record) protocol —
   *     [[graft.operators.Scripted.LuaRegistry]]; no Lua VM offline)
   *   - OUTPUT: `file` (Format json/csv/ltsv, Path), `counter`,
-  *     `flowcounter` (Unit), `forward` (wire-format frames to parquet,
+  *     `flowcounter` (a record count; its per-Unit console report is left
+  *     out), `forward` (wire-format frames to parquet,
   *     Time_as_Integer), `null`, `stdout`
   *
   * Filters run on a fixed-schema line frame (`line`, `file`, `tag` +
@@ -102,10 +102,7 @@ object ConfPipeline {
   final case class OutputSpec(plugin: String, matchGlob: String,
                               options: Map[String, String])
 
-  final case class Loaded(
-      input: DataFrame,
-      filtered: DataFrame,
-      outputs: Seq[OutputSpec])
+  final case class Loaded(filtered: DataFrame, outputs: Seq[OutputSpec])
 
   def load(spark: SparkSession, confText: String, parsersText: String): Loaded =
     load(spark, confText, parsersText, new ConfParser.Env())
@@ -134,28 +131,32 @@ object ConfPipeline {
         case None => default
       }
 
+    // The one input-parse path (tail, exec, stdin, tcp/syslog): the parser
+    // flattens `line`, then stamps the record time from Time_Key (the
+    // reference's in_tail parse path) — gives throttle/lua/flowcounter a
+    // ts column to work on, identically over every input. Both Time_Key
+    // AND Time_Format must be set: a key without a format would add an
+    // all-null ts that flips those filters from no-op to actively
+    // bucketing everything into null. No parser leaves the line frame.
+    def parsedLines(df: DataFrame, parser: Option[graft.parsers.ParserDef]): DataFrame =
+      parser.fold(df) { p =>
+        val flat = ParserFilter.flatten("line", p)(df)
+        if (p.timeKey.isDefined && p.timeFormat.isDefined)
+          flat.withColumn("ts", p.eventTime(col("line")))
+        else flat
+      }
+
     // ---- INPUT (first supported section wins; multiple inputs → union)
     val inputs = sections.filter(_.name == "INPUT").map { s =>
+      // drain window of the network faces (tcp/syslog, forward, mqtt)
+      def quietMs = s.get("Quiet_Ms").map(_.toLong).getOrElse(300L)
+      def timeoutMs = s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L)
       s.get("Name").map(_.toLowerCase) match {
         case Some("tail") =>
           val path = s.get("Path").getOrElse(
             throw new IllegalArgumentException("tail input needs Path"))
           val tag = s.get("Tag").getOrElse("*")
-          val df = TailSource.lines(spark, path, tag)
-          inputParser(s) match {
-            case Some(p) =>
-              val parsed = ParserFilter.flatten("line", p)(df)
-              // tail+parser stamps the record time from Time_Key (the
-              // reference's in_tail parse path) — gives throttle/lua/
-              // flowcounter a ts column to work on. Both Time_Key AND
-              // Time_Format must be set: a key without a format would add
-              // an all-null ts that flips those filters from no-op to
-              // actively bucketing everything into null
-              if (p.timeKey.isDefined && p.timeFormat.isDefined)
-                parsed.withColumn("ts", p.eventTime(col("line")))
-              else parsed
-            case None => df
-          }
+          parsedLines(TailSource.lines(spark, path, tag), inputParser(s))
         case Some("dummy") =>
           val n = s.get("Samples").map(_.toLong).getOrElse(1000L)
           val tag = s.get("Tag").getOrElse("dummy.0")
@@ -177,17 +178,7 @@ object ConfPipeline {
           val cmd = s.get("Command").getOrElse(
             throw new IllegalArgumentException("exec input needs Command"))
           val tag = s.get("Tag").getOrElse("exec.0")
-          val df = graft.sources.ExecSource(spark, cmd, tag)
-          inputParser(s) match {
-            case Some(p) =>
-              val parsed = ParserFilter.flatten("line", p)(df)
-              // same ts stamping as tail+Parser — throttle/flowcounter
-              // must behave identically over either input
-              if (p.timeKey.isDefined && p.timeFormat.isDefined)
-                parsed.withColumn("ts", p.eventTime(col("line")))
-              else parsed
-            case None => df
-          }
+          parsedLines(graft.sources.ExecSource(spark, cmd, tag), inputParser(s))
         case Some("stdin") =>
           // in_stdin (in_stdin.c:88-180): read stdin to EOF. The
           // reference's DEFAULT mode consumes a newline-AGNOSTIC stream
@@ -199,29 +190,21 @@ object ConfPipeline {
           // fails the buffer) and each value json-parses; an explicit
           // Parser handles newline-split lines (in_stdin.c:150-168).
           val tag = s.get("Tag").getOrElse("stdin.0")
-          def flattenWith(df: org.apache.spark.sql.DataFrame,
-                          p: graft.parsers.ParserDef) = {
-            val parsed = ParserFilter.flatten("line", p)(df)
-            if (p.timeKey.isDefined && p.timeFormat.isDefined)
-              parsed.withColumn("ts", p.eventTime(col("line")))
-            else parsed
-          }
           (inputParser(s), parsers.get("json")) match {
-            case (Some(p), _) => // explicit Parser: per-line records
-              flattenWith(graft.sources.StdinSource(
-                spark, graft.sources.StdinSource.stream(), tag), p)
             case (None, Some(json)) => // default JSON-value-stream mode
               import spark.implicits._
               val text = new String(
                 graft.sources.StdinSource.stream().readAllBytes(),
                 java.nio.charset.StandardCharsets.UTF_8)
               val values = graft.sources.Serial.jsonStream(text)
-              flattenWith(values.toDF("line")
+              parsedLines(values.toDF("line")
                 .withColumn("file", lit("stdin"))
-                .withColumn("tag", lit(tag)), json)
-            case (None, None) => // no parser anywhere: raw line frame
-              graft.sources.StdinSource(
-                spark, graft.sources.StdinSource.stream(), tag)
+                .withColumn("tag", lit(tag)), Some(json))
+            // explicit Parser: per-line records; no parser anywhere: the
+            // raw line frame
+            case (explicit, _) =>
+              parsedLines(graft.sources.StdinSource(
+                spark, graft.sources.StdinSource.stream(), tag), explicit)
           }
         case Some("tcp") | Some("syslog") =>
           // in_tcp (tcp_conn.c) / in_syslog (syslog_conf.c:48-68): bind
@@ -250,8 +233,6 @@ object ConfPipeline {
               throw new IllegalArgumentException(s"tcp input has no Mode (got $m)")
             case None => if (isSyslog) "unix_udp" else "tcp"
           }
-          val quietMs = s.get("Quiet_Ms").map(_.toLong).getOrElse(300L)
-          val timeoutMs = s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L)
           val df =
             if (mode == "unix_udp" || mode == "udp") {
               val l = graft.sources.NetworkSources.listenUdp(port)
@@ -267,14 +248,7 @@ object ConfPipeline {
                   s"[conf-${s.get("Name").get.toLowerCase}] deferred $deferred unterminated tail bytes (open connection mid-line)")
               graft.sources.NetworkSources.lineRows(spark, payloads, tag)
             }
-          inputParser(s) match {
-            case Some(p) =>
-              val parsed = ParserFilter.flatten("line", p)(df)
-              if (p.timeKey.isDefined && p.timeFormat.isDefined)
-                parsed.withColumn("ts", p.eventTime(col("line")))
-              else parsed
-            case None => df
-          }
+          parsedLines(df, inputParser(s))
         case Some("forward") =>
           // in_forward (fw_prot.c): drain msgpack frames, decode leniently,
           // and surface each entry as columns — tag, ts (from the fixext8
@@ -283,11 +257,7 @@ object ConfPipeline {
           // driver's accept loop, so the driver-side key scan adds nothing)
           val port = s.get("Port").map(_.toInt).getOrElse(24224)
           val l = graft.sources.NetworkSources.listen(port)
-          val payloads =
-            try l.drainUntilQuiet(
-              s.get("Quiet_Ms").map(_.toLong).getOrElse(300L),
-              s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L))
-            finally l.close()
+          val payloads = try l.drainUntilQuiet(quietMs, timeoutMs) finally l.close()
           val decoded = payloads.map(graft.sinks.MsgpackDecode.unpackFramesLenient)
           val skipped = decoded.map(_._2).sum
           if (skipped > 0)
@@ -317,6 +287,12 @@ object ConfPipeline {
           val sec = s.get("Interval_Sec").map(_.toLong).getOrElse(0L)
           val nsec = s.get("Interval_NSec").map(_.toLong).getOrElse(0L)
           val interval = if (sec <= 0 && nsec <= 0) 1.0 else sec + nsec / 1e9
+          // in_proc.c:192-210: false OR off disables, true OR on enables;
+          // the other sampler flags read on-ish the same way
+          def onish(k: String) = s.get(k).exists(v =>
+            v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on"))
+          def offish(k: String) = s.get(k).exists(v =>
+            v.equalsIgnoreCase("false") || v.equalsIgnoreCase("off"))
           n match {
             case "mem" =>
               Samplers.mem(spark, tag, pid = s.get("Pid").map(_.toLong))
@@ -326,33 +302,20 @@ object ConfPipeline {
             case "netif" =>
               val iface = s.get("Interface").getOrElse(
                 throw new IllegalArgumentException("netif input needs Interface"))
-              Samplers.netif(spark, iface, tag, interval,
-                verbose = s.get("Verbose").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")))
+              Samplers.netif(spark, iface, tag, interval, verbose = onish("Verbose"))
             case "proc" =>
               val name = s.get("Proc_Name").getOrElse(
                 throw new IllegalArgumentException("proc input needs Proc_Name"))
-              // in_proc.c:192-210: false OR off disables (true/on enables,
-              // anything else keeps the default-on)
-              def offish(k: String) = s.get(k).exists(v =>
-                v.equalsIgnoreCase("false") || v.equalsIgnoreCase("off"))
+              // Mem/Fd default on: anything but false/off keeps them
               Samplers.proc(spark, name, tag,
-                mem = !offish("Mem"),
-                fds = !offish("Fd"),
-                alert = s.get("Alert").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")))
+                mem = !offish("Mem"), fds = !offish("Fd"), alert = onish("Alert"))
             case "health" =>
               val host = s.get("Host").getOrElse(
                 throw new IllegalArgumentException("health input needs Host"))
               val port = s.get("Port").map(_.toInt).getOrElse(
                 throw new IllegalArgumentException("health input needs Port"))
-              Samplers.health(spark, host, port, tag,
-                addHost = s.get("Add_Host").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")),
-                addPort = s.get("Add_Port").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")),
-                alert = s.get("Alert").exists(v =>
-                  v.equalsIgnoreCase("true") || v.equalsIgnoreCase("on")))
+              Samplers.health(spark, host, port, tag, addHost = onish("Add_Host"),
+                addPort = onish("Add_Port"), alert = onish("Alert"))
           }
         case Some("mqtt") =>
           // in_mqtt (mqtt_prot.c): an embedded MQTT 3.1.1 broker listens on
@@ -366,11 +329,7 @@ object ConfPipeline {
           val port = s.get("Port").map(_.toInt).getOrElse(1883)
           val tag = s.get("Tag").getOrElse("mqtt.0")
           val b = graft.sources.Mqtt.broker(port)
-          val msgs =
-            try b.drainUntilQuiet(
-              s.get("Quiet_Ms").map(_.toLong).getOrElse(300L),
-              s.get("Timeout_Ms").map(_.toLong).getOrElse(30000L))
-            finally b.close()
+          val msgs = try b.drainUntilQuiet(quietMs, timeoutMs) finally b.close()
           val parsed = msgs.flatMap { case (topic, payload) =>
             graft.sources.Mqtt.jsonFlat(new String(payload, "UTF-8")) match {
               case Some(kvs) => Some((topic, kvs.toMap))
@@ -523,7 +482,7 @@ object ConfPipeline {
         matchGlob = s.get("Match").getOrElse("*"),
         options = s.entries.map { case (k, v) => k.toLowerCase -> v }.toMap)
     }
-    Loaded(input, filtered, outputs)
+    Loaded(filtered, outputs)
   }
 
   /** Conf-mode `modify` (plugins/filter_modify): conditions ALL must hold,
@@ -581,28 +540,40 @@ object ConfPipeline {
     (framed, valueCols)
   }
 
-  /** Execute the outputs (fan-out: each output sees every matching row). */
+  /** Execute the outputs (fan-out: each output sees every matching row)
+    * and return each output's record count.
+    *
+    * The count rides each output's own write: an `Observation` on the
+    * output's rows counts them as its one write job streams them, the
+    * way the reference counts OUT_OK_RECORDS in the flush that delivers
+    * the chunk (`flb_metrics.h:28-35`). Nothing re-reads an output to
+    * count it; outputs that deliver nothing anywhere (counter, null,
+    * stdout, flowcounter, unknown plugins) run a `noop` write so the
+    * observation still fires. The filtered frame is cached once and
+    * filled by the first output's write, so a run is one Spark job per
+    * output.
+    */
   def run(loaded: Loaded, outDir: String): Seq[(String, Long)] = {
     val cached = loaded.filtered.cache()
     try {
       loaded.outputs.zipWithIndex.map { case (o, idx) =>
+        val obs = Observation()
         val rows = cached.filter(Glob.tagMatches(col("tag"), o.matchGlob))
+          .observe(obs, count(lit(1)).as("records"))
         val sinkName = s"${o.plugin}_$idx"
-        val n: Long = o.plugin match {
+        val path = o.options.getOrElse("path", s"$outDir/$sinkName")
+        o.plugin match {
           case "file" =>
             val fmt = o.options.getOrElse("format", "json")
-            val path = o.options.getOrElse("path", s"$outDir/$sinkName")
             // reference-exact bytes (FileFormat): the record is every key
             // except the tag envelope and the event time, which rides
             // beside the map as flb_time (file.c:210-213)
             val (withTime, valueCols) = withFlbTime(rows)
             graft.sinks.FileFormat.writeExact(
               withTime, path, fmt, "tag", "_sec", "_nsec", valueCols)
-            rows.count()
           case "forward" =>
             // wire-format frames (sinks/Forward), parquet of binary frames
             // — the serialization half of out_forward; no socket
-            val path = o.options.getOrElse("path", s"$outDir/$sinkName")
             val timeAsInt = o.options.get("time_as_integer").exists(_.equalsIgnoreCase("on"))
             val recCols = rows.columns.filterNot(_ == "tag")
             graft.sinks.Forward.frames(
@@ -622,11 +593,6 @@ object ConfPipeline {
                 .withColumn("_ord", xxhash64(col(recCols.head))),
               "tag", "_sec", "_nsec", "_rec", "_ord", timeAsInteger = timeAsInt)
               .write.mode("overwrite").parquet(path)
-            // count from the WRITTEN table (column-pruned scan) — no
-            // recompute of the frame aggregation, no NPE on empty sinks
-            cached.sparkSession.read.parquet(path)
-              .agg(coalesce(sum(col("n_entries")), lit(0L)))
-              .collect()(0).getLong(0)
           // payload-serialization sinks: the network client plugins with
           // the socket replaced by a text file — ONE reference-exact
           // record payload per line. Reassembling the request body from
@@ -636,7 +602,6 @@ object ConfPipeline {
           // concatenated with NO separator (splunk.c:130); nats/http =
           // '[' + lines joined ', ' + ']' (one JSON array per request)
           case "es" | "influxdb" | "splunk" | "nats" | "http" =>
-            val path = o.options.getOrElse("path", s"$outDir/$sinkName")
             val (withTime, valueCols) = withFlbTime(rows)
             val (frame, line) = o.plugin match {
               case "es" =>
@@ -674,15 +639,17 @@ object ConfPipeline {
                 iso8601 = o.options.get("json_date_format").exists(_.equalsIgnoreCase("iso8601"))))
             }
             frame.select(line.as("value")).write.mode("overwrite").text(path)
-            rows.count()
-          case "counter" | "null" => rows.count()
-          case "flowcounter" if rows.columns.contains("ts") =>
-            val unit = o.options.getOrElse("unit", "minute")
-            graft.sinks.Sinks.flowCounter(rows, "ts", unit).count()
-          case "stdout" => rows.count() // console printing elided in batch
-          case _        => rows.count()
+          // counter, null, stdout, flowcounter and unknown plugins deliver
+          // nothing here: the count is the output. stdout's lines and
+          // flowcounter's per-Unit report are console output in the
+          // reference, and batch mode leaves console output out. Selecting
+          // no column lets the cache scan decode only what Match reads.
+          case _ => rows.select().write.format("noop").mode("overwrite").save()
         }
-        sinkName -> n
+        // an output that shuffles (forward, influxdb) and whose rows came
+        // out empty is cut by AQE to an empty relation, and the observation
+        // then arrives without its metric: no metric means no records
+        sinkName -> obs.get.getOrElse("records", 0L).asInstanceOf[Long]
       }
     } finally { cached.unpersist(); () }
   }

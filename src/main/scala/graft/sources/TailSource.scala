@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,23 @@ object TailSource {
   }
 
   def lines(spark: SparkSession, pathGlob: String, tagPattern: String = "*"): DataFrame = {
-    val df = spark.read.text(pathGlob)
+    // Expand the glob once with Hadoop's globber, as Spark's own reader
+    // does (qualified pattern, qualified matches), and hand Spark the
+    // matched files: given the literal glob, Spark probes it for a
+    // streaming-sink `_spark_metadata` directory and logs the miss as a
+    // WARN with a full stack trace on every read. `__globPaths__` is
+    // Spark's own switch (its file-stream source sets it) that reads the
+    // matches as literal paths, so a file name holding a glob
+    // metacharacter is not globbed a second time. When nothing matches,
+    // the glob goes through unchanged and Spark's path-not-found error
+    // stays as it is.
+    val glob = new Path(pathGlob)
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val matched = Option(fs.globStatus(fs.makeQualified(glob)))
+      .toSeq.flatten.map(st => fs.makeQualified(st.getPath).toString)
+    val df =
+      if (matched.isEmpty) spark.read.text(pathGlob)
+      else spark.read.option("__globPaths__", "false").text(matched: _*)
     df.select(
       col("value").as("line"),
       input_file_name().as("file"),

@@ -260,12 +260,19 @@ class ConfPipelineSpec extends AnyFunSuite {
          |    Match  *app_frontend*
          |    Format json
          |    Path   $dir/out_app
+         |
+         |[OUTPUT]
+         |    Name   forward
+         |    Match  nomatch.*
+         |    Path   $dir/out_none
          |""".stripMargin
 
     val loaded = ConfPipeline.load(spark, conf, parsersConf)
     val results = ConfPipeline.run(loaded, s"$dir/out").toMap
     assert(results("counter_0") == 3L) // 500,503 from app + 500 from db
     assert(results("file_1") == 2L) // only the app_frontend file's 5xx
+    // an empty sink reports 0, also where AQE cuts its empty shuffle
+    assert(results("forward_2") == 0L)
     // the file output landed with reference-exact json lines
     // (file.c:216-229): 'tag: [%f, {map}]', partitioned by tag
     val written = spark.read.text(s"$dir/out_app").select("value")
@@ -422,6 +429,79 @@ class ConfPipelineSpec extends AnyFunSuite {
     val http = lines(s"$dir/out_http")
     assert(http.length == 2 && http.forall(
       _.matches("""\{"date":"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6}Z", .*\}""")))
+  }
+
+  test("run counts each output on its own write: one Spark job per output") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft-conf-jobs").toString
+    mkLog(dir, "app.log", Seq(200, 500, 503))
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/*.log
+         |    Tag    logs.*
+         |    Parser apache
+         |
+         |[OUTPUT]
+         |    Name   file
+         |    Match  *
+         |    Format json
+         |    Path   $dir/out_json
+         |
+         |[OUTPUT]
+         |    Name   file
+         |    Match  *
+         |    Format csv
+         |    Path   $dir/out_csv
+         |
+         |[OUTPUT]
+         |    Name   counter
+         |    Match  *
+         |""".stripMargin
+    val loaded = ConfPipeline.load(spark, conf, parsersConf)
+    val sc = spark.sparkContext
+    val group = "conf-jobs-spec"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ConfPipeline.run")
+    val results =
+      try ConfPipeline.run(loaded, s"$dir/out").toMap
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.TestBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(results == Map("file_0" -> 3L, "file_1" -> 3L, "counter_2" -> 3L))
+    // no recount after a write and no separate cache fill: the first
+    // write fills the cache, and each output's count comes out of its write
+    assert(jobs.get == 3, s"${jobs.get} Spark jobs for 3 outputs")
+  }
+
+  test("flowcounter output returns its record count, not its bucket count") {
+    val dir = Files.createTempDirectory("graft-conf-flow").toString
+    // four records in one minute: one flowcounter bucket, four records
+    mkLog(dir, "app.log", Seq(200, 500, 503, 404))
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/*.log
+         |    Tag    logs.*
+         |    Parser apache
+         |
+         |[OUTPUT]
+         |    Name   flowcounter
+         |    Match  *
+         |    Unit   minute
+         |""".stripMargin
+    val loaded = ConfPipeline.load(spark, conf, parsersConf)
+    assert(loaded.filtered.columns.contains("ts")) // the bucketing column is there
+    val results = ConfPipeline.run(loaded, s"$dir/out").toMap
+    assert(results("flowcounter_0") == 4L)
   }
 
   // a free port found by binding ephemeral then releasing — the conf text

@@ -204,6 +204,20 @@ class StreamingSpec extends AnyFunSuite {
     val got = df.select("line", "tag").as[(String, String)].collect().toSet
     assert(got.map(_._1) == Set("a", "b", "c"))
     assert(got.forall { case (_, t) => t.startsWith("t.") && t.endsWith(".log") })
+    // a glob matching one file reads through the same expansion, naming
+    // the file as Spark's own glob expansion does; a glob matching nothing
+    // still fails as Spark's own path-not-found error
+    val one = TailSource.lines(spark, s"$dir/y.*", "t.*")
+    assert(one.select("line", "file").as[(String, String)].collect().toSeq ==
+      spark.read.text(s"$dir/*.log").select(col("value"), input_file_name())
+        .filter(col("value") === "c").as[(String, String)].collect().toSeq)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      TailSource.lines(spark, s"$dir/*.nope", "t.*"))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+    // a matched name holding a glob metacharacter is read literally
+    val odd = Files.createTempDirectory("graft-tail3").toString
+    Files.writeString(java.nio.file.Paths.get(odd, "a[1].log"), "d\n")
+    assert(TailSource.lines(spark, s"$odd/*.log").select("line").as[String].collect().toSeq == Seq("d"))
   }
 
   test("dummy/random generators are deterministic") {
