@@ -34,9 +34,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.GraftExtensions", name),
         builder))
     }
-    // runs in the post-hoc optimizer batch — after the predicate pushdown
-    // that creates the GetStructField(RegexParse) shape it narrows
+    // runs inside the operator-optimization fixed point, beside the
+    // predicate pushdown that creates the GetStructField(RegexParse) shape
+    // it narrows; pushdown never undoes a narrowing, so the batch settles
     ext.injectOptimizerRule(_ => graft.plans.PruneRegexParseFields)
+    // must run after the last predicate pushdown, which follows every
+    // optimizer slot an extension can fill (the "Pre CBO Rules" once-batch
+    // too), so extension sessions share the parse at planning
+    ext.injectPlannerStrategy(_ => graft.plans.ShareRegexParse.AtPlanning)
   }
 }
 
@@ -114,7 +119,14 @@ object GraftExtensions {
     */
   def installRules(spark: org.apache.spark.sql.SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(graft.plans.PruneRegexParseFields))
-      spark.experimental.extraOptimizations = cur :+ graft.plans.PruneRegexParseFields
+    spark.experimental.extraOptimizations = cur ++ rules.filterNot(cur.contains)
   }
+
+  /** The optimizer rules [[installRules]] appends, in order. The session's
+    * extra optimizations run as the optimizer's last batch, after every
+    * predicate pushdown, so the share rewrite can follow the pruning one.
+    */
+  private val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    Seq(graft.plans.PruneRegexParseFields, graft.plans.ShareRegexParse)
 }

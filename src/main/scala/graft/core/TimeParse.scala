@@ -109,7 +109,9 @@ object TimeParse {
       else ("%Y " + fmt, concat(lit(s"$RefYear "), s))
     val pattern = toSparkPattern(fmt2.replace(".%L", "").replace("%L", ""))
 
-    val base = to_timestamp(s2, pattern)
+    // a time that does not parse gives null, not a failed job (ANSI
+    // `to_timestamp` throws): the record keeps going without a parsed time
+    val base = try_to_timestamp(s2, lit(pattern))
     val shifted =
       if (hasTz || tzOffsetSec == 0) base
       else timestamp_micros(unix_micros(base) - tzOffsetSec * 1000000L)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.parsers.{ParserDef, RegexFormat}
+import graft.parsers.ParserDef
 
 /** `filter_parser` (`plugins/filter_parser/filter_parser.c`): apply a named
   * parser to the string value of `Key_Name`. On success the parsed map
@@ -62,8 +62,15 @@ object ParserFilter {
   }
 
   /** Fixed-schema face: appends each parsed group as `<prefix><group>`
-    * typed column, a `parse_ok` flag, and (when the parser has time
-    * config) overrides `tsCol` with the parsed event time on success.
+    * typed column, a `parse_ok` flag, and (when the parser has both
+    * Time_Key and Time_Format) sets `tsCol` to the parsed event time on
+    * success — over the column's old value where the frame has one, as a
+    * new column otherwise.
+    *
+    * The event time comes out of the same match as the fields
+    * ([[ParserDef.parsedWithTime]]): a regex parser runs its pattern once
+    * per record, not once more for the time as [[ParserDef.eventTime]]
+    * over the raw string would.
     *
     * Decoder rules: the fixed schema applies the IN-PLACE string backends
     * (`Decode_Field_As escaped/escaped_utf8`) to their columns; the
@@ -73,7 +80,8 @@ object ParserFilter {
   def flatten(keyName: String, parser: ParserDef, tsCol: Option[String] = None,
               prefix: String = "")(df: DataFrame): DataFrame = {
     val raw = col(keyName)
-    val p = parser.parsed(raw)
+    val stamp = tsCol.filter(_ => parser.stampsTime)
+    val p = if (stamp.isDefined) parser.parsedWithTime(raw) else parser.parsed(raw)
     val names = parser.outputNames
     val withParsed = df.withColumn("_p", p)
     val withCols0 = names.foldLeft(withParsed)((d, n) =>
@@ -88,10 +96,9 @@ object ParserFilter {
       }
     }
     val withOk = withCols.withColumn("parse_ok", col("_p").isNotNull)
-    val withTs = tsCol match {
-      case Some(t) if parser.timeKey.isDefined =>
-        withOk.withColumn(t, coalesce(parser.eventTime(raw), col(t)))
-      case _ => withOk
+    val withTs = stamp.fold(withOk) { t =>
+      val ts = parser.eventTimeOf(col("_p"), raw)
+      withOk.withColumn(t, if (withOk.columns.contains(t)) coalesce(ts, col(t)) else ts)
     }
     withTs.drop("_p")
   }

@@ -85,10 +85,7 @@ final case class ParserDef(
     * more than once per record.
     */
   def parsed(raw: Column): Column = format match {
-    case RegexFormat =>
-      val keep = groupNames.filter(g => timeKeep || !timeKey.contains(outName(g)))
-      RegexParse(raw, cleanRegex,
-        keep.map(g => ParsedField(g, types.getOrElse(outName(g), "string"), outName(g))))
+    case RegexFormat => RegexParse(raw, cleanRegex, keptFields)
     case JsonFormat =>
       val schema = jsonSchema.getOrElse(
         throw new IllegalArgumentException(s"parser $name: json format needs jsonSchema"))
@@ -97,6 +94,41 @@ final case class ParserDef(
         case Some(tk) if !timeKeep && schema.fieldNames.contains(tk) => st.dropFields(tk)
         case _ => st
       }
+  }
+
+  private def keptFields: Seq[ParsedField] =
+    groupNames.filter(g => timeKeep || !timeKey.contains(outName(g)))
+      .map(g => ParsedField(g, types.getOrElse(outName(g), "string"), outName(g)))
+
+  /** Both Time_Key and Time_Format are set: a parse stamps the event time. */
+  def stampsTime: Boolean = timeKey.isDefined && timeFormat.isDefined
+
+  /** The capture group a regex parser's Time_Key names. */
+  private def timeGroup: Option[String] =
+    timeKey.flatMap(tk => groupNames.find(g => outName(g) == tk))
+
+  /** [[parsed]] plus, for a regex parser that [[stampsTime]], the time
+    * group as one more string field ([[ParserDef.TimeField]], whatever
+    * `Types` and `Time_Keep` say) — the reference takes the time key out
+    * of the same walk over the groups (`flb_parser_regex.c:166-183`).
+    * Read it back with [[eventTimeOf]].
+    */
+  def parsedWithTime(raw: Column): Column = (format, timeGroup) match {
+    case (RegexFormat, Some(g)) if stampsTime =>
+      RegexParse(raw, cleanRegex, keptFields :+ ParsedField(g, "string", ParserDef.TimeField))
+    case _ => parsed(raw)
+  }
+
+  /** Event time of a record whose [[parsedWithTime]] struct is `p`: a
+    * regex parser reads the time field of that same match; a json parser
+    * reads `raw` like [[eventTime]]. Null when the parse missed, the time
+    * does not parse or the parser has no time config.
+    */
+  def eventTimeOf(p: Column, raw: Column): Column = (format, timeGroup, timeFormat) match {
+    case (RegexFormat, Some(_), Some(tf)) =>
+      TimeParse.parse(p.getField(ParserDef.TimeField), tf, timeOffsetSec)
+    case (RegexFormat, None, _) => lit(null).cast(TimestampType)
+    case _ => eventTime(raw)
   }
 
   /** Event time derived from an ALREADY-PARSED struct column (no second
@@ -119,6 +151,12 @@ final case class ParserDef(
 
   /** Event-time column extracted per Time_Key/Time_Format (null when the
     * parse missed or the parser has no time config).
+    *
+    * For a regex parser this runs the pattern a second time over `raw`,
+    * beside whatever parse the caller already runs; a pipeline that parses
+    * the record anyway reads the time from that parse with
+    * [[parsedWithTime]] + [[eventTimeOf]] (or [[eventTimeFrom]] under
+    * `Time_Keep`).
     */
   def eventTime(raw: Column): Column = (timeKey, timeFormat) match {
     case (Some(tk), Some(tf)) =>
@@ -140,6 +178,13 @@ final case class ParserDef(
       jsonSchema.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
         .filter(f => timeKeep || !timeKey.contains(f))
   }
+}
+
+object ParserDef {
+  /** [[ParserDef.parsedWithTime]]'s extra field. `#` is legal in no
+    * capture-group name, so it cannot collide with a parsed key.
+    */
+  val TimeField = "#time"
 }
 
 object Parsers {

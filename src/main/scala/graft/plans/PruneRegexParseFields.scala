@@ -35,10 +35,11 @@ import graft.functions.{RegexParse, RegexParseField}
   * plan are referenced as attributes, not inline children, and are left
   * untouched as before.
   *
-  * Registered via `GraftExtensions` (`injectOptimizerRule`) and via
-  * `spark.experimental.extraOptimizations` on the repo's own sessions —
-  * both run after the main operator-optimization batches, i.e. after the
-  * pushdown that creates the shape.
+  * Registered via `GraftExtensions` (`injectOptimizerRule`, inside the
+  * operator-optimization fixed point, where it narrows the shape as soon
+  * as pushdown creates it) and via `spark.experimental.extraOptimizations`
+  * on the repo's own sessions (the optimizer's last batch, after every
+  * pushdown).
   */
 object PruneRegexParseFields extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

@@ -139,12 +139,7 @@ object ConfPipeline {
     // all-null ts that flips those filters from no-op to actively
     // bucketing everything into null. No parser leaves the line frame.
     def parsedLines(df: DataFrame, parser: Option[graft.parsers.ParserDef]): DataFrame =
-      parser.fold(df) { p =>
-        val flat = ParserFilter.flatten("line", p)(df)
-        if (p.timeKey.isDefined && p.timeFormat.isDefined)
-          flat.withColumn("ts", p.eventTime(col("line")))
-        else flat
-      }
+      parser.fold(df)(p => ParserFilter.flatten("line", p, tsCol = Some("ts"))(df))
 
     // ---- INPUT (first supported section wins; multiple inputs → union)
     val inputs = sections.filter(_.name == "INPUT").map { s =>

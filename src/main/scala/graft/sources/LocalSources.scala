@@ -25,9 +25,10 @@ object HeadSource {
             addPath: Boolean = false): DataFrame = {
     require(lines > 0 || bytes > 0,
       "head input needs lines > 0 or bytes > 0 (reference default: 256-byte buffer)")
+    val (reader, paths) = TailSource.globbed(spark, pathGlob)
     val base =
       if (lines > 0)
-        spark.read.option("wholetext", "true").text(pathGlob)
+        reader.option("wholetext", "true").text(paths: _*)
           .select(input_file_name().as("file"),
             // strip ONE trailing newline before splitting ("\n\\z", not
             // "\n$" — Java $ also matches BEFORE a final terminator and
@@ -35,7 +36,7 @@ object HeadSource {
             concat_ws("\n", slice(split(regexp_replace(col("value"), "\n\\z", ""), "\n"),
               1, lines)).as(key))
       else
-        spark.read.format("binaryFile").load(pathGlob)
+        reader.format("binaryFile").load(paths: _*)
           .select(col("path").as("file"),
             decode(substring(col("content"), 1, bytes.toInt), "UTF-8").as(key))
     val tagged = base.withColumn("tag", TailSource.composeTag(tagPattern, col("file")))
@@ -51,7 +52,8 @@ object HeadSource {
     val rec0 = map_from_arrays(
       transform(sequence(lit(0), size(ls) - 1), i => concat(lit("line"), i)), ls)
     val rec = if (addPath) map_concat(map(lit("path"), col("file")), rec0) else rec0
-    spark.read.option("wholetext", "true").text(pathGlob)
+    val (reader, paths) = TailSource.globbed(spark, pathGlob)
+    reader.option("wholetext", "true").text(paths: _*)
       .select(input_file_name().as("file"), col("value"))
       .select(col("file"), rec.as("record"))
       .withColumn("tag", TailSource.composeTag(tagPattern, col("file")))

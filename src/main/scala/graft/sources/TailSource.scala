@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** `in_tail` (reference `plugins/in_tail/`): follow files by glob, split on
@@ -37,33 +37,40 @@ object TailSource {
       lit(tagPattern.substring(idx + 1)))
   }
 
-  def lines(spark: SparkSession, pathGlob: String, tagPattern: String = "*"): DataFrame = {
-    // Expand the glob once with Hadoop's globber, as Spark's own reader
-    // does (qualified pattern, qualified matches), and hand Spark the
-    // matched files: given the literal glob, Spark probes it for a
-    // streaming-sink `_spark_metadata` directory and logs the miss as a
-    // WARN with a full stack trace on every read. `__globPaths__` is
-    // Spark's own switch (its file-stream source sets it) that reads the
-    // matches as literal paths, so a file name holding a glob
-    // metacharacter is not globbed a second time. When nothing matches,
-    // the glob goes through unchanged and Spark's path-not-found error
-    // stays as it is.
+  /** A reader and the paths to load for a file glob.
+    *
+    * Expands the glob once with Hadoop's globber, as Spark's own reader
+    * does (qualified pattern, qualified matches), and hands Spark the
+    * matched files: given the literal glob, Spark probes it for a
+    * streaming-sink `_spark_metadata` directory and logs the miss as a
+    * WARN with a full stack trace on every read. `__globPaths__` is
+    * Spark's own switch (its file-stream source sets it) that reads the
+    * matches as literal paths, so a file name holding a glob
+    * metacharacter is not globbed a second time. When nothing matches,
+    * the glob goes through unchanged and Spark's path-not-found error
+    * stays as it is.
+    */
+  private[sources] def globbed(spark: SparkSession, pathGlob: String): (DataFrameReader, Seq[String]) = {
     val glob = new Path(pathGlob)
     val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val matched = Option(fs.globStatus(fs.makeQualified(glob)))
       .toSeq.flatten.map(st => fs.makeQualified(st.getPath).toString)
-    val df =
-      if (matched.isEmpty) spark.read.text(pathGlob)
-      else spark.read.option("__globPaths__", "false").text(matched: _*)
-    df.select(
+    if (matched.isEmpty) (spark.read, Seq(pathGlob))
+    else (spark.read.option("__globPaths__", "false"), matched)
+  }
+
+  def lines(spark: SparkSession, pathGlob: String, tagPattern: String = "*"): DataFrame = {
+    val (reader, paths) = globbed(spark, pathGlob)
+    reader.text(paths: _*).select(
       col("value").as("line"),
       input_file_name().as("file"),
       composeTag(tagPattern, input_file_name()).as("tag"))
   }
 
   def linesNumbered(spark: SparkSession, pathGlob: String, tagPattern: String = "*"): DataFrame = {
-    val df = spark.read.option("wholetext", "true").text(pathGlob)
-    df.select(input_file_name().as("file"), col("value"))
+    val (reader, paths) = globbed(spark, pathGlob)
+    reader.option("wholetext", "true").text(paths: _*)
+      .select(input_file_name().as("file"), col("value"))
       .select(col("file"),
         posexplode(split(col("value"), "\n")).as(Seq("line_no", "line")))
       .filter(col("line") =!= "") // trailing newline artifact

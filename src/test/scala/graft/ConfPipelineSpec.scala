@@ -482,6 +482,70 @@ class ConfPipelineSpec extends AnyFunSuite {
     assert(jobs.get == 3, s"${jobs.get} Spark jobs for 3 outputs")
   }
 
+  test("regex census: the conf input path matches the parser's pattern once per line") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.functions.{RegexExtractStruct, RegexParse, RegexParseField}
+    val dir = Files.createTempDirectory("graft-conf-census").toString
+    Files.createDirectories(Paths.get(dir, "web"))
+    Files.createDirectories(Paths.get(dir, "api"))
+    mkLog(s"$dir/web", "a.log", Seq(200, 500, 404))
+    mkLog(s"$dir/api", "a.log", Seq(503, 200))
+    // the conf_files benchmark's shape: two tails → apache → grep
+    // Exclude → record_modifier
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/web/*.log
+         |    Tag    web.access
+         |    Parser apache
+         |[INPUT]
+         |    Name   tail
+         |    Path   $dir/api/*.log
+         |    Tag    api.access
+         |    Parser apache
+         |[FILTER]
+         |    Name    grep
+         |    Match   *
+         |    Exclude code ^2
+         |[FILTER]
+         |    Name       record_modifier
+         |    Match      *
+         |    Remove_key file
+         |    Record     env bench
+         |""".stripMargin
+    def regexes(p: SparkPlan): Int = p.collect { case n =>
+      n.expressions.map(_.collect {
+        case _: RegexParse | _: RegexParseField | _: RegexExtractStruct => ()
+      }.size).sum
+    }.sum
+    def census(s: SparkSession): Unit = {
+      val filtered = ConfPipeline.load(s, conf, parsersConf).filtered
+      val plan = filtered.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val branches = plan.collect { case u: UnionExec => u.children }.flatten
+      assert(branches.size == 2, plan)
+      assert(branches.map(regexes) == Seq(1, 1), plan)
+      // the 2xx lines are gone, every kept line carries its parsed time
+      val rows = filtered.select("tag", "code", "ts").collect()
+      assert(rows.map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==
+        Seq(("api.access", 503L), ("web.access", 404L), ("web.access", 500L)))
+      assert(rows.forall(_.getTimestamp(2).getTime == 1500322623000L))
+    }
+    // a session with the rules installed (the repo's own mains) and one
+    // built with the SQL extension alone
+    census(spark)
+    val extended = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    try census(extended)
+    finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("flowcounter output returns its record count, not its bucket count") {
     val dir = Files.createTempDirectory("graft-conf-flow").toString
     // four records in one minute: one flowcounter bucket, four records

@@ -58,4 +58,16 @@ class ExtensionsSpec extends AnyFunSuite {
     // whole local-relation query away (which is exactly the point)
     assert(qe.analyzed.toString.contains("LIKE"), qe.analyzed.toString)
   }
+
+  test("GraftExtensions: PruneRegexParseFields is an optimizer rule, the share rewrite a planner strategy") {
+    import org.apache.spark.sql.{SparkSessionExtensions, TestExtensions}
+    import graft.plans.{PruneRegexParseFields, ShareRegexParse}
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    assert(TestExtensions.optimizerRules(ext, spark) == Seq(PruneRegexParseFields))
+    // no pre-CBO rule: predicate pushdown runs again after that batch and
+    // would push the shared filter back
+    assert(TestExtensions.preCBORules(ext, spark).isEmpty)
+    assert(TestExtensions.plannerStrategies(ext, spark) == Seq(ShareRegexParse.AtPlanning))
+  }
 }

@@ -62,6 +62,47 @@ class LocalSourcesSpec extends AnyFunSuite {
     assert(m == Map("line0" -> "a", "line1" -> "b"))
   }
 
+  test("file globs expand once: no metadata-probe WARN, PATH_NOT_FOUND on no match, literal names") {
+    import org.apache.logging.log4j.core.LogEvent
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import graft.sources.TailSource
+    val dir = Files.createTempDirectory("graft-headglob").toString
+    mkFile(dir, "a.log", "l1\nl2\n")
+    mkFile(dir, "b[1].log", "m1\n")
+    val reads: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "head lines" -> (g => HeadSource(spark, g, "h", lines = 1)),
+      "head bytes" -> (g => HeadSource(spark, g, "h", bytes = 2)),
+      "head Split_line" -> (g => HeadSource.splitLines(spark, g, "h", lines = 1)),
+      "tail numbered" -> (g => TailSource.linesNumbered(spark, g, "t")))
+    // Spark's metadata probe of a literal glob warns through its
+    // FileStreamSink logger, which the root logger's config serves
+    val root = org.apache.logging.log4j.core.LoggerContext.getContext(false)
+      .getConfiguration.getRootLogger
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("glob-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith(".FileStreamSink")) warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    root.addAppender(appender, null, null)
+    try reads.foreach { case (what, read) =>
+      // both files, the one with a glob metacharacter read literally
+      val files = read(s"$dir/*.log").select("file").as[String].collect()
+        .map(f => java.net.URLDecoder.decode(f.split('/').last, "UTF-8")).distinct.sorted
+      assert(files.toSeq == Seq("a.log", "b[1].log"), what)
+    } finally {
+      root.removeAppender(appender.getName)
+      appender.stop()
+    }
+    assert(warns.isEmpty, warns)
+    // a glob matching nothing goes to Spark as it is, for its own error
+    reads.foreach { case (what, read) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](read(s"$dir/*.nope"))
+      assert(e.getCondition == "PATH_NOT_FOUND", s"$what: ${e.getMessage}")
+    }
+  }
+
   test("exec: one record per stdout line via sh -c (in_exec.c:46-100)") {
     val got = ExecSource(spark, "printf 'x 1\\ny 2\\n'", "cmd.0")
       .select("line", "tag").as[(String, String)].collect().toSeq

@@ -72,6 +72,39 @@ class ParserFilterSpec extends AnyFunSuite {
     assert(out(2L).getTimestamp(3).getTime == java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime)
   }
 
+  test("flatten stamps ts from its own match: equal to eventTime over the raw line, row by row") {
+    val lines = Seq(
+      (1, clf),
+      (2, "garbage"),                                   // the pattern misses
+      (3, clf.replace("17/Jul/2017", "17/Foo/2017")),   // the time does not parse
+      (4, clf.replace("+0000", "-0230")),
+      (5, null))
+    val df = lines.toDF("id", "line").repartition(2)
+    val apache = Parsers.apache
+    val parsers = Seq(
+      apache,
+      apache.copy(timeKeep = true),
+      apache.copy(types = apache.types + ("time" -> "integer")),
+      apache.copy(timeKeep = true, types = apache.types + ("time" -> "integer")),
+      apache.copy(timeOffsetSec = 3600),
+      Parsers.syslogRfc5424,
+      Parsers.docker)
+    parsers.foreach { p =>
+      val got = ParserFilter.flatten("line", p, tsCol = Some("ts"))(df)
+        .withColumn("want", p.eventTime(col("line")))
+        .select("id", "ts", "want").as[(Int, Option[java.sql.Timestamp], Option[java.sql.Timestamp])]
+        .collect().sortBy(_._1).toSeq
+      assert(got.map(_._1) == lines.map(_._1))
+      got.foreach { case (id, ts, want) => assert(ts == want, s"${p.name} ${p.types} row $id") }
+      assert(got.head._2.isDefined || p == Parsers.syslogRfc5424 || p == Parsers.docker)
+    }
+    // the time column stays only under Time_Keep, typed per Types
+    val kept = ParserFilter.flatten("line", apache.copy(timeKeep = true,
+      types = apache.types + ("time" -> "integer")), tsCol = Some("ts"))(df)
+    assert(kept.schema("time").dataType == org.apache.spark.sql.types.LongType)
+    assert(!ParserFilter.flatten("line", apache, tsCol = Some("ts"))(df).columns.contains("time"))
+  }
+
   test("Reserve_Data with a parsed-but-NULL field does not duplicate the key (optional groups)") {
     // apache line WITHOUT referer/agent → parsed referer is null but the
     // key is OWNED by the parse; an original 'referer' must not re-enter

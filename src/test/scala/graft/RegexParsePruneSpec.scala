@@ -114,4 +114,47 @@ class RegexParsePruneSpec extends AnyFunSuite {
     // its source sink + sink_all
     assert(rows("sink_all") == 66L)
   }
+
+  test("ShareRegexParse: fires only where the filter reads the same match on every row it drops") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+    import org.apache.spark.sql.types.StringType
+    import graft.functions.RegexParseField
+    import graft.plans.ShareRegexParse
+    val line = AttributeReference("line", StringType)()
+    val other = AttributeReference("other", StringType)()
+    val tag = AttributeReference("tag", StringType)()
+    val rel = LocalRelation(line, other, tag)
+    val parse = Alias(RegexParse(line, pattern, fields), "p")()
+    val code = fields(1)
+    // grep `Exclude code ^2` after pushdown and pruning: two reads
+    def exclude(read: Expression): Expression = CaseWhen(
+      Seq(IsNull(read) -> Literal.TrueLiteral),
+      Not(EqualNullSafe(StartsWith(Cast(read, StringType), Literal("2")), Literal.TrueLiteral)))
+    def shape(cond: Expression): LogicalPlan = Project(Seq(line, parse), Filter(cond, rel))
+    val same = RegexParseField(line, pattern, code)
+
+    val shared = ShareRegexParse(shape(exclude(same)))
+    val p = parse.toAttribute
+    assert(shared == Project(Seq(line, p),
+      Filter(exclude(GetStructField(p, 1, Some("code"))), Project(rel.output :+ parse, rel))))
+    // idempotent: the rewritten plan has no inline parse over a filter left
+    assert(ShareRegexParse(shared) == shared)
+    // a grep gated by its Match still reads the parse on every row it drops
+    val gated = Or(Not(EqualTo(tag, Literal("a"))), exclude(same))
+    assert(ShareRegexParse(shape(gated)) != shape(gated))
+
+    val unchanged = Seq(
+      // a different pattern, or the same pattern over a different column
+      exclude(RegexParseField(line, pattern + "x", code)),
+      exclude(RegexParseField(other, pattern, code)),
+      // a field the Project's parse does not extract
+      exclude(RegexParseField(line, pattern, ParsedField("code"))),
+      // rows with another tag are dropped without a match: sharing would
+      // add one for each of them
+      And(EqualTo(tag, Literal("a")), exclude(same)),
+      // one read: the scan planner inlines the alias back as a full parse
+      EqualNullSafe(StartsWith(Cast(same, StringType), Literal("5")), Literal.TrueLiteral))
+    unchanged.foreach(c => assert(ShareRegexParse(shape(c)) == shape(c), c))
+  }
 }

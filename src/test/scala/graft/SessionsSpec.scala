@@ -31,9 +31,27 @@ class SessionsSpec extends AnyFunSuite {
     try {
       val s = Sessions.create("graft-sessions-spec")
       assert(s eq spark)
-      assert(s.experimental.extraOptimizations.contains(graft.plans.PruneRegexParseFields))
+      assert(s.experimental.extraOptimizations ==
+        Seq(graft.plans.PruneRegexParseFields, graft.plans.ShareRegexParse))
       assert(s.sparkContext.master == "local[4]")
       assert(s.conf.get("spark.sql.shuffle.partitions") == partitions)
+    } finally spark.experimental.extraOptimizations = saved
+  }
+
+  test("installRules appends the prune and share rules once, after the session's own") {
+    val saved = spark.experimental.extraOptimizations
+    val own = org.apache.spark.sql.catalyst.optimizer.ConstantFolding
+    spark.experimental.extraOptimizations = Seq(own)
+    try {
+      GraftExtensions.installRules(spark)
+      GraftExtensions.installRules(spark)
+      assert(spark.experimental.extraOptimizations ==
+        Seq(own, graft.plans.PruneRegexParseFields, graft.plans.ShareRegexParse))
+      // a session that already holds one of them gets only the other
+      spark.experimental.extraOptimizations = Seq(graft.plans.ShareRegexParse)
+      GraftExtensions.installRules(spark)
+      assert(spark.experimental.extraOptimizations ==
+        Seq(graft.plans.ShareRegexParse, graft.plans.PruneRegexParseFields))
     } finally spark.experimental.extraOptimizations = saved
   }
 
