@@ -18,9 +18,9 @@ import graft.sources.{TailFixture, TokenTable}
   * why.
   *
   *   - `query <name> [explain]`: time one `SparkEntry.queries` entry 3×
-  *     (noop sink, Bench's full-materialization shape) with a per-run
-  *     job/stage/task census; `explain` first prints the formatted
-  *     physical plan. `QDEBUG_JOBS=1` logs every job and stage.
+  *     (query construction plus a noop sink write, as Bench times it)
+  *     with a per-run job/stage/task census; `explain` first prints the
+  *     formatted physical plan. `QDEBUG_JOBS=1` logs every job and stage.
   *   - `seq [n] [k]`: cross-query interference — replay the first `n`
   *     queries alphabetically (warm-up + timed, Bench phase-1 shape), then
   *     re-time the first `k` at the end. A re-run slower than its first
@@ -60,7 +60,10 @@ object Probe {
     try run(spark) finally spark.stop()
   }
 
-  private def noopWrite(df: DataFrame): Double = {
+  /** Times building `df` AND its noop write, as Bench does: eager
+    * operators (iterative loops, driver collects) run while the query is
+    * built, so timing only the write would miss them. */
+  private def noopWrite(df: => DataFrame): Double = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9

@@ -485,7 +485,6 @@ class ConfPipelineSpec extends AnyFunSuite {
   test("regex census: the conf input path matches the parser's pattern once per line") {
     import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import graft.functions.{RegexExtractStruct, RegexParse, RegexParseField}
     val dir = Files.createTempDirectory("graft-conf-census").toString
     Files.createDirectories(Paths.get(dir, "web"))
@@ -522,10 +521,7 @@ class ConfPipelineSpec extends AnyFunSuite {
     }.sum
     def census(s: SparkSession): Unit = {
       val filtered = ConfPipeline.load(s, conf, parsersConf).filtered
-      val plan = filtered.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
+      val plan = PlanNodes.stripAQEPlan(filtered.queryExecution.executedPlan)
       val branches = plan.collect { case u: UnionExec => u.children }.flatten
       assert(branches.size == 2, plan)
       assert(branches.map(regexes) == Seq(1, 1), plan)
