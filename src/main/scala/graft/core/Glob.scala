@@ -65,7 +65,9 @@ object Glob {
     var i = 0
     while (i < glob.length) {
       glob.charAt(i) match {
-        case '*'  => sb.append('%')
+        // a run of `*` is one `%` (cosmetic; semantics identical); collapsing
+        // here, not over the output, leaves an escaped `\%` before it alone
+        case '*'  => if (i == 0 || glob.charAt(i - 1) != '*') sb.append('%')
         case '%'  => sb.append("\\%")
         case '_'  => sb.append("\\_")
         case '\\' => sb.append("\\\\")
@@ -73,8 +75,7 @@ object Glob {
       }
       i += 1
     }
-    // collapse consecutive % (cosmetic; semantics identical)
-    sb.toString.replaceAll("%+", "%")
+    sb.toString
   }
 
   /** Routing predicate as a Catalyst column: compiled once at plan build,

@@ -15,8 +15,11 @@ import graft.core.Glob
   * once to `LIKE` predicates ([[Glob.toLikePattern]], mirroring the boot-time
   * static route precomputation `src/flb_router.c:97-172`):
   *
-  *   - [[fanOut]] — single pass: append `sinks: array<string>` of matching
-  *     sink names and `explode` (the built-in Generator). One scan, then
+  *   - [[fanOut]] — single pass: `explode` an array holding, per sink in
+  *     config order, its name when its glob matches and null otherwise, then
+  *     drop the nulls. Generate and Filter both codegen, so the fan-out runs
+  *     inside the parse/enrich whole-stage codegen stage and feeds the
+  *     partial aggregate in the same loop. One scan, then
   *     `groupBy(sink)`/`partitionBy(sink)` downstream. Preferred when most
   *     sinks match few rows or aggregates per sink follow.
   *   - [[perSinkFrames]] — N filtered views over one (optionally cached)
@@ -30,18 +33,19 @@ final case class SinkSpec(name: String, matchGlob: String)
 
 object Router {
 
-  /** Array of matching sink names for a tag (order = config order). */
-  def matchingSinks(tag: Column, sinks: Seq[SinkSpec]): Column =
-    filter(
-      array(sinks.map(s => when(Glob.tagMatches(tag, s.matchGlob), lit(s.name))): _*),
-      x => x.isNotNull)
-
-  /** Single-pass duplication: one row per (record, matching sink). Rows
-    * matching no sink are dropped (a task with zero routes is destroyed,
-    * `src/flb_engine_dispatch.c:140-150`).
+  /** Single-pass duplication: one row per (record, matching sink), sinks
+    * in config order. Rows matching no sink are dropped (a task with zero
+    * routes is destroyed, `src/flb_engine_dispatch.c:140-150`). Nulls are
+    * dropped by a Filter, not a `filter(array, x -> …)` lambda: higher-order
+    * functions are `CodegenFallback` and take the Generate out of
+    * whole-stage codegen.
     */
-  def fanOut(df: DataFrame, tagCol: String, sinks: Seq[SinkSpec]): DataFrame =
-    df.withColumn("sink", explode(matchingSinks(col(tagCol), sinks)))
+  def fanOut(df: DataFrame, tagCol: String, sinks: Seq[SinkSpec]): DataFrame = {
+    val tag = col(tagCol)
+    df.withColumn("sink",
+        explode(array(sinks.map(s => when(Glob.tagMatches(tag, s.matchGlob), lit(s.name))): _*)))
+      .filter(col("sink").isNotNull)
+  }
 
   /** Per-sink filtered views (caller may `.cache()` df first when writing
     * several sinks in separate jobs).

@@ -18,8 +18,9 @@ import graft.route.{Router, SinkSpec}
   * Scale shape:
   *   - the transform chain is NARROW (parse/grep/enrich broadcast) — no
   *     shuffle until the per-sink aggregate;
-  *   - fan-out duplicates rows via `explode` of the matched-sink array
-  *     (Fluent Bit duplication semantics, `src/flb_task.c:255-277`);
+  *   - fan-out duplicates rows via `explode` of a per-sink name-or-null
+  *     array plus a null filter (Fluent Bit duplication semantics,
+  *     `src/flb_task.c:255-277`), inside the parse/enrich codegen stage;
   *   - the write partitions by sink directory; per-sink aggregates ride
   *     a `groupBy(sink)` whose input is already sink-exploded — one
   *     exchange of small pre-aggregated rows (partial aggregation);

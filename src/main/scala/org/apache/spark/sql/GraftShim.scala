@@ -18,11 +18,15 @@ object GraftShim {
     * accumulates dead block-manager entries. Safe once no live DataFrame
     * reads the checkpoint: local checkpoints are MEMORY_AND_DISK-backed,
     * so this frees storage rather than risking recompute-of-truncated-
-    * lineage failures.
+    * lineage failures. Goes through the `private[spark]`
+    * `SparkContext.unpersistRDD`, which drops the same blocks as
+    * `RDD.unpersist` without its WARN that a locally checkpointed RDD's
+    * lineage is truncated — logged once per round otherwise.
     */
   def freeLocalCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case _ => ()
     }
 }

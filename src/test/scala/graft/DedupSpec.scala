@@ -158,6 +158,38 @@ class DedupSpec extends AnyFunSuite {
     assert(lbl == Dedup.connectedComponents(selfy, "a", "b").as[(Long, Long)].collect().toMap)
   }
 
+  test("CC rounds free their checkpoints without the truncated-lineage WARN") {
+    import org.apache.logging.log4j.core.LogEvent
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // `RDD.unpersist` warns once per locally checkpointed RDD it frees —
+    // once per round, through the RDD class's logger the root config serves
+    val root = org.apache.logging.log4j.core.LoggerContext.getContext(false)
+      .getConfiguration.getRootLogger
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("cc-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("locally checkpointed")) warns.add(m)
+      }
+    }
+    val path = (0L until 6L).map(i => (i, i + 1)).toDF("a", "b")
+    val held = spark.sparkContext.getPersistentRDDs.size
+    appender.start()
+    root.addAppender(appender, null, null)
+    try {
+      val labels = Dedup.connectedComponents(path, "a", "b").as[(Long, Long)].collect()
+      assert(labels.length == 7 && labels.forall(_._2 == 0L))
+      // the blocks are still freed: only the returned labels' checkpoint stays
+      assert(spark.sparkContext.getPersistentRDDs.size - held <= 1)
+      assert(Dedup.connectedComponentsStar(path, "a", "b").count() == 7)
+    } finally {
+      root.removeAppender(appender.getName)
+      appender.stop()
+    }
+    assert(warns.isEmpty, warns)
+  }
+
   test("decontamination: twins of benchmark docs flagged; corpus side joins via broadcast") {
     val base = spark.range(0, 200).select(col("id").as("seq"),
       graft.sources.TokenTable.tokensFor(col("id") - col("id") % 2).as("tokens"))

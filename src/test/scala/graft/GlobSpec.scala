@@ -39,7 +39,11 @@ class GlobSpec extends AnyFunSuite {
     ("axb", "a_b", false),
     ("a\\b", "a\\b", true),
     ("a%b", "a*b", true),
-    ("a_c", "a*", true)
+    ("a_c", "a*", true),
+    // an escaped literal `%` next to a `*` stays a literal
+    ("b%x", "b%*", true),
+    ("bx", "b%*", false),
+    ("x%b", "*%b", true)
   )
 
   test("flb_router_match port matches reference vectors") {
@@ -83,5 +87,6 @@ class GlobSpec extends AnyFunSuite {
     assert(Glob.toLikePattern("a_b") == "a\\_b")
     assert(Glob.toLikePattern("a%b") == "a\\%b")
     assert(Glob.toLikePattern("a**b") == "a%b")
+    assert(Glob.toLikePattern("b%**") == "b\\%%")
   }
 }

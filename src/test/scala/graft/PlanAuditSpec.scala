@@ -4,8 +4,16 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{RegexParse, RegexParseField}
 import graft.operators.Grep
 import graft.route.SinkSpec
 import graft.run.{Pipeline, PipelineSpec}
@@ -13,7 +21,8 @@ import graft.sources.TokenTable
 
 /** Physical-plan invariants of the headline pipeline — the properties that
   * make it hold at 100 TB. Each one regressed at least once during
-  * development; asserting on the plan string keeps them pinned.
+  * development. The headline and scan pins walk the physical-plan tree
+  * ([[PlanNodes]]); the rest still match the plan string.
   */
 class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -30,33 +39,76 @@ class PlanAuditSpec extends AnyFunSuite {
       .groupBy(col("sink")).agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("s"))
   }
 
-  private def headlinePlan(withEnrich: Boolean): String = {
+  /** The headline aggregate, run, so AQE's final plan is the current one. */
+  private def headlineRun(withEnrich: Boolean): DataFrame = {
     val out = headlineAgg(TokenTable.synthetic(spark, 1000, 4), withEnrich)
     out.collect()
-    out.queryExecution.executedPlan.toString
+    out
   }
 
+  private def regexes(p: SparkPlan): Int =
+    p.expressions.map(_.collect { case _: RegexParse | _: RegexParseField => () }.size).sum
+
+  private def isPartial(h: HashAggregateExec): Boolean =
+    h.aggregateExpressions.nonEmpty && h.aggregateExpressions.forall(_.mode == Partial)
+
   test("headline pipeline: the fused apache parse evaluates ONCE per row") {
-    val plan = headlinePlan(withEnrich = false)
     // filter pushdown substitutes the parse alias into every reference of
     // the grep predicate — a two-reference predicate doubles the parse
-    val n = "regexparse".r.findAllIn(plan.toLowerCase).size
-    // AQE prints final + initial plan sections → one occurrence each
-    assert(n <= 2, s"apache regexparse appears $n times:\n$plan")
+    val out = headlineRun(withEnrich = false)
+    PlanNodes.sections(out).foreach { nodes =>
+      val n = nodes.map(regexes).sum
+      // one, not none: the grep reads the parsed `code`
+      assert(n == 1, s"$n apache regex parse expressions:\n${out.queryExecution.executedPlan}")
+    }
   }
 
   test("headline pipeline: broadcast enrich, partial agg before the single exchange") {
-    val plan = headlinePlan(withEnrich = true)
-    assert(plan.contains("BroadcastHashJoin"), "enrich must be a broadcast join")
-    assert(!plan.contains("SortMergeJoin"), "no shuffle join on the fact side")
-    assert(plan.contains("partial_count"), "map-side partial aggregation must ride the fan-out")
+    val out = headlineRun(withEnrich = true)
+    val plan = out.queryExecution.executedPlan
+    val nodes = PlanNodes.of(out)
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"enrich must be a broadcast join:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"no shuffle join on the fact side:\n$plan")
     // exactly one data exchange per plan section (the sink agg); the only
     // other exchange is the dim broadcast
-    val sections = plan.split("== Initial Plan ==")
-    sections.foreach { s =>
-      val shuffles = "Exchange hashpartitioning".r.findAllIn(s).size
-      assert(shuffles == 1, s"expected 1 shuffle, saw $shuffles in:\n$s")
+    PlanNodes.sections(out).foreach { section =>
+      val shuffles = section.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(shuffles.size == 1, s"expected 1 shuffle, saw ${shuffles.size} in:\n$plan")
+      // map-side partial aggregation must ride the fan-out
+      val partials = PlanNodes.collect(shuffles.head) { case h: HashAggregateExec if isPartial(h) => h }
+      assert(partials.nonEmpty, s"no partial aggregate below the exchange:\n$plan")
     }
+  }
+
+  test("headline fan-out runs in the parse/enrich codegen stage with the partial aggregate") {
+    // a higher-order function such as `filter(array, x -> …)` is
+    // CodegenFallback and keeps its Generate out of whole-stage codegen —
+    // every kept row then crosses two stage boundaries, copied each time
+    val out = headlineRun(withEnrich = true)
+    val plan = out.queryExecution.executedPlan
+    val stages = PlanNodes.codegenStages(out)
+    def stageOf(what: String)(p: PartialFunction[SparkPlan, Boolean]): Int = {
+      val at = stages.indexWhere(_.exists(n => p.applyOrElse(n, (_: SparkPlan) => false)))
+      assert(at >= 0, s"no codegen stage holds the $what:\n$plan")
+      at
+    }
+    val grep = stageOf("grep filter") { case f: FilterExec => regexes(f) > 0 }
+    assert(stageOf("fan-out generate") { case _: GenerateExec => true } == grep, plan)
+    assert(stageOf("partial aggregate") { case h: HashAggregateExec => isPartial(h) } == grep, plan)
+    assert(stages(grep).exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)
+  }
+
+  test("headline pipeline: no fact-side node carries a CodegenFallback expression") {
+    // one such expression takes its whole node out of whole-stage codegen
+    val out = headlineRun(withEnrich = true)
+    val fallbacks = for {
+      n <- PlanNodes.factSide(out)
+      e <- n.expressions
+      f <- e.collect { case f: CodegenFallback => f }
+    } yield s"${n.nodeName}: ${f.prettyName}"
+    assert(fallbacks.isEmpty, s"$fallbacks in:\n${out.queryExecution.executedPlan}")
   }
 
   test("headline agg never reads the token array: no `tokens` in the parquet ReadSchema") {
@@ -64,18 +116,17 @@ class PlanAuditSpec extends AnyFunSuite {
     // the parse, route and sum inputs — reading it would multiply scan bytes
     val path = Files.createTempDirectory("graft-plan-audit").resolve("in").toString
     TokenTable.synthetic(spark, 1000, 4).write.parquet(path)
-    val plan = headlineAgg(spark.read.parquet(path), withEnrich = true)
-      .queryExecution.executedPlan.toString
-    val schema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
-    assert(schema.contains("n_tok"), plan)
-    assert(!schema.contains("tokens"), schema)
+    val out = headlineAgg(spark.read.parquet(path), withEnrich = true)
+    val scans = PlanNodes.of(out).collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+    assert(scans.size == 1, out.queryExecution.executedPlan)
+    assert(scans.head.contains("n_tok"), scans)
+    assert(!scans.head.contains("tokens"), scans)
   }
 
   test("fixture queries prune the documents scan to doc_id only") {
     val q = SparkEntry.queries("fb_parse_nginx")(spark, "/root/testdata/sf0.001")
-    val scan = q.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("ReadSchema")).getOrElse("")
-    assert(scan.contains("struct<doc_id:bigint>"), scan)
+    val scans = PlanNodes.of(q).collect { case s: FileSourceScanExec => s.requiredSchema.catalogString }
+    assert(scans == Seq("struct<doc_id:bigint>"), q.queryExecution.executedPlan)
   }
 
   test("hashed span ops: every exchange keys on the 8-byte hash, never the gram string") {

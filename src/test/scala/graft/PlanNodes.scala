@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
+  BroadcastQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 
 /** Physical-plan nodes for plan assertions, walked as a tree instead of
   * matched in `executedPlan.toString`. Spark's helper sees through the
@@ -13,4 +15,39 @@ object PlanNodes extends AdaptiveSparkPlanHelper {
   /** Every node of `df`'s executed plan. */
   def of(df: DataFrame): Seq[SparkPlan] =
     collect(df.queryExecution.executedPlan) { case p => p }
+
+  /** The nodes of each plan AQE explains: the current one, then the
+    * initial one it started from (`== Initial Plan ==`). A plan without
+    * AQE has one section.
+    */
+  def sections(df: DataFrame): Seq[Seq[SparkPlan]] =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        Seq(of(df), collect(a.initialPlan) { case p => p })
+      case _ => Seq(of(df))
+    }
+
+  /** The nodes each whole-stage codegen stage fuses into one loop: the
+    * stage's subtree down to the `InputAdapter`s that feed it.
+    */
+  def codegenStages(df: DataFrame): Seq[Seq[SparkPlan]] = {
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(fused)
+    }
+    of(df).collect { case w: WholeStageCodegenExec => fused(w.child) }
+  }
+
+  /** The nodes outside broadcast build sides: the fact side of a plan
+    * that enriches through broadcast joins.
+    */
+  def factSide(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => Nil
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _ => p +: p.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
 }
