@@ -54,7 +54,7 @@ object GraftExtensions {
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "regex_parse" -> { children: Seq[Expression] =>
       val pattern = litString(children(1), "regex_parse pattern")
-      val names = graft.functions.RegexExtractStruct.groupNamesOf(pattern)
+      val names = RegexParse.groupNamesOf(pattern)
       RegexParse(children.head, pattern, names.map(ParsedField(_)))
     },
     "glob_match" -> { children: Seq[Expression] =>

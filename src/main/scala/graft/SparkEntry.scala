@@ -73,9 +73,9 @@ object SparkEntry {
     // -- time lookup: strptime %d/%b/%Y:%H:%M:%S %z → epoch seconds
     "fb_parse_time" -> ((s, dir) => {
       val t = TokenTable.fromDocuments(s, dir)
+      val p = Parsers.apache
       t.select(col("seq"),
-        unix_timestamp(Parsers.apache.eventTime(col("doc_id")))
-          .as("tsec"))
+        unix_timestamp(p.eventTimeOf(p.parsedWithTime(col("doc_id")))).as("tsec"))
     }),
 
     // -- grep filter: Regex rule on the parsed code field (5xx)
@@ -112,19 +112,18 @@ object SparkEntry {
     //    each over a deterministic fixture line; the oracle reconstructs
     //    the expected fields ARITHMETICALLY — see Fixtures)
     "fb_parse_nginx" -> ((s, dir) => {
-      // ONE regex match per row: keep the time group in the parse struct
-      // (timeKeep) and derive the event time from the already-parsed field
-      // — the eventTime(raw) form would run the full pattern a second time
-      val p = Parsers.nginx.copy(timeKeep = true)
+      // ONE regex match per row: the event time comes out of the same
+      // parse as the fields
+      val p = Parsers.nginx
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.nginxLine)
-      f.withColumn("p", p.parsed(col("raw")))
+      f.withColumn("p", p.parsedWithTime(col("raw")))
         .select(col("seq"),
           col("p.remote").as("remote"), col("p.host").as("host"),
           col("p.user").as("usr"), col("p.method").as("method"),
           col("p.path").as("path"), col("p.code").as("code"),
           col("p.size").as("size"), col("p.referer").as("referer"),
           col("p.agent").as("agent"),
-          unix_timestamp(p.eventTimeFrom(col("p"))).as("tsec"))
+          unix_timestamp(p.eventTimeOf(col("p"))).as("tsec"))
     }),
 
     "fb_parse_apache2" -> ((s, dir) => {
@@ -150,49 +149,49 @@ object SparkEntry {
     // %L fractional seconds verified at MICROSECOND resolution
     "fb_parse_docker_daemon" -> ((s, dir) => {
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.dockerDaemonLine)
-      f.withColumn("p", Parsers.dockerDaemon.parsed(col("raw")))
+      f.withColumn("p", Parsers.dockerDaemon.parsedWithTime(col("raw")))
         .select(col("seq"),
           col("p.time").as("time"), col("p.level").as("level"),
           col("p.msg").as("msg"),
-          // time derived from the kept field — one regex match per row
-          unix_micros(Parsers.dockerDaemon.eventTimeFrom(col("p"))).as("tus"))
+          // time read from the same parse — one regex match per row
+          unix_micros(Parsers.dockerDaemon.eventTimeOf(col("p"))).as("tus"))
     }),
 
     // slash-wrapped regex + no-year time (pinned ref-year injection)
     "fb_parse_rfc3164" -> ((s, dir) => {
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.rfc3164Line)
-      f.withColumn("p", Parsers.syslogRfc3164.parsed(col("raw")))
+      f.withColumn("p", Parsers.syslogRfc3164.parsedWithTime(col("raw")))
         .select(col("seq"),
           col("p.pri").as("pri"), col("p.time").as("time"),
           col("p.host").as("host"), col("p.ident").as("ident"),
           col("p.pid").as("pid"), col("p.message").as("message"),
-          unix_timestamp(Parsers.syslogRfc3164.eventTimeFrom(col("p"))).as("tsec"))
+          unix_timestamp(Parsers.syslogRfc3164.eventTimeOf(col("p"))).as("tsec"))
     }),
 
     // lazy message + optional trailing `<ms>ms` suffix
     "fb_parse_mongodb" -> ((s, dir) => {
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.mongodbLine)
-      f.withColumn("p", Parsers.mongodb.parsed(col("raw")))
+      f.withColumn("p", Parsers.mongodb.parsedWithTime(col("raw")))
         .select(col("seq"),
           col("p.time").as("time"), col("p.severity").as("severity"),
           col("p.component").as("component"), col("p.context").as("context"),
           col("p.message").as("message"), col("p.ms").as("ms"),
-          unix_micros(Parsers.mongodb.eventTimeFrom(col("p"))).as("tus"))
+          unix_micros(Parsers.mongodb.eventTimeOf(col("p"))).as("tus"))
     }),
 
     // generic json parser: schema-on-read projection + time-key removal
     "fb_parse_json" -> ((s, dir) => {
       import org.apache.spark.sql.types._
-      // timeKeep keeps the time field in the ONE from_json struct; tsec is
-      // derived from it — the eventTime(raw) form would re-parse the whole
-      // JSON per row via get_json_object (round-3 10×-phase outlier)
-      val p = Parsers.jsonGeneric.copy(timeKeep = true, jsonSchema = Some(StructType(Seq(
+      // tsec comes out of the ONE from_json that parses the fields; a
+      // get_json_object beside it would parse the whole JSON per row again
+      // (round-3 10×-phase outlier)
+      val p = Parsers.jsonGeneric.copy(jsonSchema = Some(StructType(Seq(
         StructField("k", LongType), StructField("name", StringType),
         StructField("time", StringType)))))
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.jsonLine)
-      f.withColumn("p", p.parsed(col("raw")))
+      f.withColumn("p", p.parsedWithTime(col("raw")))
         .select(col("seq"), col("p.k").as("k"), col("p.name").as("name"),
-          unix_timestamp(p.eventTimeFrom(col("p"))).as("tsec"))
+          unix_timestamp(p.eventTimeOf(col("p"))).as("tsec"))
     }),
 
     // underscore group names sanitized for java.util.regex, restored on out
@@ -210,24 +209,24 @@ object SparkEntry {
     // (the shipped definition has no Types line)
     "fb_parse_rfc5424" -> ((s, dir) => {
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.rfc5424Line)
-      f.withColumn("p", Parsers.syslogRfc5424.parsed(col("raw")))
+      f.withColumn("p", Parsers.syslogRfc5424.parsedWithTime(col("raw")))
         .select(col("seq"),
           col("p.pri").as("pri"), col("p.time").as("time"),
           col("p.host").as("host"), col("p.ident").as("ident"),
           col("p.pid").as("pid"), col("p.msgid").as("msgid"),
           col("p.extradata").as("extradata"), col("p.message").as("message"),
-          unix_micros(Parsers.syslogRfc5424.eventTimeFrom(col("p"))).as("tus"))
+          unix_micros(Parsers.syslogRfc5424.eventTimeOf(col("p"))).as("tus"))
     }),
 
     // rfc3164-local: no host group, no-year time (ref-year injection)
     "fb_parse_rfc3164_local" -> ((s, dir) => {
       val f = Fixtures.seqs(s, dir).withColumn("raw", Fixtures.rfc3164LocalLine)
-      f.withColumn("p", Parsers.syslogRfc3164Local.parsed(col("raw")))
+      f.withColumn("p", Parsers.syslogRfc3164Local.parsedWithTime(col("raw")))
         .select(col("seq"),
           col("p.pri").as("pri"), col("p.time").as("time"),
           col("p.ident").as("ident"), col("p.pid").as("pid"),
           col("p.message").as("message"),
-          unix_timestamp(Parsers.syslogRfc3164Local.eventTimeFrom(col("p"))).as("tsec"))
+          unix_timestamp(Parsers.syslogRfc3164Local.eventTimeOf(col("p"))).as("tsec"))
     }),
 
     // docker: json parse + the DECLARED `Decode_Field_As escaped log` rule

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Decoders
-import graft.parsers.{ParserDef, Parsers, RegexFormat}
+import graft.operators.ParserFilter
+import graft.parsers.{ParserDef, Parsers}
 
 /** Kubernetes-style metadata enrichment (reference
   * `plugins/filter_kubernetes/`): extract `(pod_name, namespace,
@@ -89,13 +90,8 @@ object Enrich {
     val pname = element_at(col(annotationsCol), "fluentbit.io/parser")
     val parsed = parsers.foldRight(lit(null).cast("map<string,string>")) {
       case ((name, p), rest) =>
-        val names = p.format match {
-          case RegexFormat => p.groupNames.filter(g => p.timeKeep || !p.timeKey.contains(g))
-          case _           => p.jsonSchema.get.fieldNames.toSeq
-        }
         val st = p.parsed(col(rawCol))
-        val asMap = map(names.flatMap(n => Seq(lit(n), st.getField(n).cast("string"))): _*)
-        when(pname === name, when(st.isNotNull, asMap)).otherwise(rest)
+        when(pname === name, when(st.isNotNull, ParserFilter.structToMap(p, st))).otherwise(rest)
     }
     df.withColumn("parsed_by_annotation", parsed)
   }

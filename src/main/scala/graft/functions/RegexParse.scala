@@ -150,6 +150,14 @@ case class RegexParseField(child: Expression, pattern: String, field: ParsedFiel
 }
 
 object RegexParse {
+  private val NamedGroup = "\\(\\?<([a-zA-Z][a-zA-Z0-9]*)>".r
+
+  /** Named capture groups in source order (what the reference turns into
+    * record keys, `flb_parser_regex.c:44-99`).
+    */
+  def groupNamesOf(pattern: String): Seq[String] =
+    NamedGroup.findAllMatchIn(pattern).map(_.group(1)).toSeq
+
   def apply(c: Column, pattern: String, fields: Seq[ParsedField]): Column =
     GraftShim.column(RegexParse(GraftShim.expression(c), pattern, fields))
 

@@ -22,7 +22,7 @@ import graft.parsers.ParserDef
 object ParserFilter {
 
   /** struct → map<string,string> for the given parser's output fields. */
-  private def structToMap(parser: ParserDef, p: Column): Column =
+  private[graft] def structToMap(parser: ParserDef, p: Column): Column =
     map(parser.outputNames.flatMap(n => Seq(lit(n), p.getField(n).cast("string"))): _*)
 
   def onMap(recordCol: String, keyName: String, parser: ParserDef,
@@ -67,10 +67,10 @@ object ParserFilter {
     * success — over the column's old value where the frame has one, as a
     * new column otherwise.
     *
-    * The event time comes out of the same match as the fields
-    * ([[ParserDef.parsedWithTime]]): a regex parser runs its pattern once
-    * per record, not once more for the time as [[ParserDef.eventTime]]
-    * over the raw string would.
+    * The event time comes out of the same parse as the fields
+    * ([[ParserDef.parsedWithTime]], read by [[ParserDef.eventTimeOf]]): a
+    * regex parser runs its pattern once per record, a json parser its
+    * `from_json` once.
     *
     * Decoder rules: the fixed schema applies the IN-PLACE string backends
     * (`Decode_Field_As escaped/escaped_utf8`) to their columns; the
@@ -97,7 +97,7 @@ object ParserFilter {
     }
     val withOk = withCols.withColumn("parse_ok", col("_p").isNotNull)
     val withTs = stamp.fold(withOk) { t =>
-      val ts = parser.eventTimeOf(col("_p"), raw)
+      val ts = parser.eventTimeOf(col("_p"))
       withOk.withColumn(t, if (withOk.columns.contains(t)) coalesce(ts, col(t)) else ts)
     }
     withTs.drop("_p")

@@ -1,11 +1,11 @@
 package graft.parsers
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.TimeParse
-import graft.functions.{ParsedField, RegexExtractStruct, RegexParse}
+import graft.functions.{ParsedField, RegexParse}
 
 /** Parser definitions — the Spark restatement of the reference's parser
   * subsystem (struct at `include/fluent-bit/flb_parser.h:39-61`, loader
@@ -51,54 +51,35 @@ final case class ParserDef(
     else r
   }
 
-  def groupNames: Seq[String] = RegexExtractStruct.groupNamesOf(cleanRegex)
-
-  /** Cast a parsed (string) field per `Types`. Cast failure keeps the
-    * string? — the reference falls back to the ORIGINAL string with a
-    * warning (`flb_parser.c:827-831`); in a fixed-schema world the field
-    * is typed, so failures become null (`try_cast` semantics), the
-    * documented deviation.
-    */
-  def castField(c: Column, key: String): Column = types.get(key) match {
-    case Some("integer") => c.cast("long")
-    case Some("float")   => c.cast("double")
-    case Some("bool")    => lower(c).startsWith("true")
-    case Some("hex")     => conv(c, 16, 10).cast("long")
-    case _               => c
-  }
-
-  def fieldType(key: String): DataType = types.get(key) match {
-    case Some("integer") => LongType
-    case Some("float")   => DoubleType
-    case Some("bool")    => BooleanType
-    case Some("hex")     => LongType
-    case _               => StringType
-  }
+  def groupNames: Seq[String] = RegexParse.groupNamesOf(cleanRegex)
 
   /** Parse `raw` → struct column with `Types` casts applied and (unless
     * `timeKeep`) the time key dropped — mirroring `flb_parser_do`
     * (`src/flb_parser.c:545-559`) + in-place time-key removal
     * (`flb_parser_regex.c:166-183`).
     *
-    * ONE expression, one regex match per row: [[RegexParse]] fuses the
-    * extraction with the casts so the compiled pattern never evaluates
-    * more than once per record.
+    * ONE expression, one regex match or JSON parse per row: [[RegexParse]]
+    * fuses the extraction with the casts so the compiled pattern never
+    * evaluates more than once per record; a json parser reads only the
+    * kept fields of its schema.
     */
   def parsed(raw: Column): Column = format match {
     case RegexFormat => RegexParse(raw, cleanRegex, keptFields)
-    case JsonFormat =>
-      val schema = jsonSchema.getOrElse(
-        throw new IllegalArgumentException(s"parser $name: json format needs jsonSchema"))
-      val st = from_json(raw, schema)
-      timeKey match {
-        case Some(tk) if !timeKeep && schema.fieldNames.contains(tk) => st.dropFields(tk)
-        case _ => st
-      }
+    case JsonFormat  => jsonParse(raw, keptJsonFields)
   }
 
   private def keptFields: Seq[ParsedField] =
     groupNames.filter(g => timeKeep || !timeKey.contains(outName(g)))
       .map(g => ParsedField(g, types.getOrElse(outName(g), "string"), outName(g)))
+
+  private def keptJsonFields: Seq[StructField] =
+    jsonSchema.fold(Seq.empty[StructField])(_.fields.toSeq)
+      .filter(f => timeKeep || !timeKey.contains(f.name))
+
+  private def jsonParse(raw: Column, fields: Seq[StructField]): Column = {
+    require(jsonSchema.isDefined, s"parser $name: json format needs jsonSchema")
+    from_json(raw, StructType(fields))
+  }
 
   /** Both Time_Key and Time_Format are set: a parse stamps the event time. */
   def stampsTime: Boolean = timeKey.isDefined && timeFormat.isDefined
@@ -107,82 +88,66 @@ final case class ParserDef(
   private def timeGroup: Option[String] =
     timeKey.flatMap(tk => groupNames.find(g => outName(g) == tk))
 
-  /** [[parsed]] plus, for a regex parser that [[stampsTime]], the time
-    * group as one more string field ([[ParserDef.TimeField]], whatever
-    * `Types` and `Time_Keep` say) — the reference takes the time key out
-    * of the same walk over the groups (`flb_parser_regex.c:166-183`).
-    * Read it back with [[eventTimeOf]].
+  /** The field of a [[parsedWithTime]] struct that holds the time string:
+    * [[ParserDef.TimeField]], except that a json parse which keeps the
+    * time key reads that key — a `from_json` struct holds each key once.
     */
-  def parsedWithTime(raw: Column): Column = (format, timeGroup) match {
-    case (RegexFormat, Some(g)) if stampsTime =>
-      RegexParse(raw, cleanRegex, keptFields :+ ParsedField(g, "string", ParserDef.TimeField))
-    case _ => parsed(raw)
+  private def timeField: Option[String] = format match {
+    case RegexFormat => timeGroup.map(_ => ParserDef.TimeField)
+    case JsonFormat =>
+      timeKey.map(tk => if (keptJsonFields.exists(_.name == tk)) tk else ParserDef.TimeField)
   }
 
-  /** Event time of a record whose [[parsedWithTime]] struct is `p`: a
-    * regex parser reads the time field of that same match; a json parser
-    * reads `raw` like [[eventTime]]. Null when the parse missed, the time
-    * does not parse or the parser has no time config.
+  /** [[parsed]] plus, for a parser that [[stampsTime]], the time string
+    * out of the same parse — the reference takes the time key out of the
+    * same walk over the record (`flb_parser_do`, `src/flb_parser.c:545-559`;
+    * `flb_parser_regex.c:166-183`). A regex parse carries the time group as
+    * one more string field ([[ParserDef.TimeField]], whatever `Types` and
+    * `Time_Keep` say). A json parse reads the time key as a string in the
+    * same `from_json`, also when its schema has no field for it, under the
+    * name [[ParserDef.TimeField]] — or under its own name when `Time_Keep`
+    * keeps it. Read the time back with [[eventTimeOf]] or [[eventTimeNsOf]].
     */
-  def eventTimeOf(p: Column, raw: Column): Column = (format, timeGroup, timeFormat) match {
-    case (RegexFormat, Some(_), Some(tf)) =>
-      TimeParse.parse(p.getField(ParserDef.TimeField), tf, timeOffsetSec)
-    case (RegexFormat, None, _) => lit(null).cast(TimestampType)
-    case _ => eventTime(raw)
-  }
+  def parsedWithTime(raw: Column): Column =
+    if (!stampsTime || !timeField.contains(ParserDef.TimeField)) parsed(raw)
+    else format match {
+      case RegexFormat =>
+        RegexParse(raw, cleanRegex,
+          keptFields :+ ParsedField(timeGroup.get, "string", ParserDef.TimeField))
+      case JsonFormat =>
+        // a struct cast renames by position: one from_json, no field copies
+        val kept = keptJsonFields
+        jsonParse(raw, kept :+ StructField(timeKey.get, StringType))
+          .cast(StructType(kept :+ StructField(ParserDef.TimeField, StringType)))
+    }
 
-  /** Event time derived from an ALREADY-PARSED struct column (no second
-    * regex match) — requires `timeKeep` so the time field is present.
+  /** Event time of a record whose [[parsedWithTime]] struct is `p`, read
+    * from that struct alone. Null when the parse missed, the time does not
+    * parse or the parser has no time config.
     */
-  def eventTimeFrom(parsedCol: Column): Column = (timeKey, timeFormat) match {
-    case (Some(tk), Some(tf)) if timeKeep =>
-      TimeParse.parse(parsedCol.getField(tk), tf, timeOffsetSec)
+  def eventTimeOf(p: Column): Column = (timeField, timeFormat) match {
+    case (Some(f), Some(tf)) => TimeParse.parse(p.getField(f), tf, timeOffsetSec)
     case _ => lit(null).cast(TimestampType)
   }
 
-  /** Full-precision `struct<sec,nsec>` envelope (SURVEY §1.3) from an
-    * already-parsed struct — `%L` digits kept at ns resolution.
+  /** [[eventTimeOf]] as the full-precision `struct<sec,nsec>` envelope
+    * (SURVEY §1.3) — `%L` digits kept at ns resolution.
     */
-  def eventTimeNsFrom(parsedCol: Column): Column = (timeKey, timeFormat) match {
-    case (Some(tk), Some(tf)) if timeKeep =>
-      TimeParse.parseNs(parsedCol.getField(tk), tf, timeOffsetSec)
+  def eventTimeNsOf(p: Column): Column = (timeField, timeFormat) match {
+    case (Some(f), Some(tf)) => TimeParse.parseNs(p.getField(f), tf, timeOffsetSec)
     case _ => lit(null).cast("struct<sec:bigint,nsec:int>")
-  }
-
-  /** Event-time column extracted per Time_Key/Time_Format (null when the
-    * parse missed or the parser has no time config).
-    *
-    * For a regex parser this runs the pattern a second time over `raw`,
-    * beside whatever parse the caller already runs; a pipeline that parses
-    * the record anyway reads the time from that parse with
-    * [[parsedWithTime]] + [[eventTimeOf]] (or [[eventTimeFrom]] under
-    * `Time_Keep`).
-    */
-  def eventTime(raw: Column): Column = (timeKey, timeFormat) match {
-    case (Some(tk), Some(tf)) =>
-      val timeStr = format match {
-        case RegexFormat =>
-          val group = groupNames.find(g => outName(g) == tk).getOrElse(tk)
-          RegexExtractStruct(raw, cleanRegex).getField(group)
-        case JsonFormat => get_json_object(raw, s"$$.$tk")
-      }
-      TimeParse.parse(timeStr, tf, timeOffsetSec)
-    case _ => lit(null).cast(TimestampType)
   }
 
   /** Output field names of [[parsed]] (record keys after alias restore). */
   def outputNames: Seq[String] = format match {
-    case RegexFormat =>
-      groupNames.filter(g => timeKeep || !timeKey.contains(outName(g))).map(outName)
-    case JsonFormat =>
-      jsonSchema.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
-        .filter(f => timeKeep || !timeKey.contains(f))
+    case RegexFormat => keptFields.map(_.outName)
+    case JsonFormat  => keptJsonFields.map(_.name)
   }
 }
 
 object ParserDef {
-  /** [[ParserDef.parsedWithTime]]'s extra field. `#` is legal in no
-    * capture-group name, so it cannot collide with a parsed key.
+  /** [[ParserDef.parsedWithTime]]'s time field. `#` is legal in no
+    * capture-group name, so it cannot collide with a regex parser's key.
     */
   val TimeField = "#time"
 }

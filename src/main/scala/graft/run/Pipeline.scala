@@ -37,7 +37,7 @@ final case class PipelineSpec(
     enrichDim: Option[DataFrame] = None,
     // carry the ns-fidelity struct<sec,nsec> envelope (`event_time`) plus
     // a derived µs `event_ts` for windowing; derived from the SAME parse
-    // (timeKeep forced on — no second regex run)
+    // (ParserDef.parsedWithTime — no second regex run)
     eventTimeNs: Boolean = false)
 
 object Pipeline {
@@ -47,15 +47,14 @@ object Pipeline {
     * raw columns).
     */
   def transform(df: DataFrame, spec: PipelineSpec): DataFrame = {
-    val parser =
-      if (spec.eventTimeNs) spec.parser.copy(timeKeep = true) else spec.parser
-    val parsed0 = df.withColumn("parsed", parser.parsed(col(spec.parseCol)))
+    val parser = spec.parser
     val target =
       if (spec.eventTimeNs)
-        parsed0
-          .withColumn("event_time", parser.eventTimeNsFrom(col("parsed")))
+        df.withColumn("parsed", parser.parsedWithTime(col(spec.parseCol)))
+          .withColumn("event_time", parser.eventTimeNsOf(col("parsed")))
           .withColumn("event_ts", graft.core.FlbTime.toTimestamp(col("event_time")))
-      else parsed0
+          .withColumn("parsed", col("parsed").dropFields(s"`${ParserDef.TimeField}`"))
+      else df.withColumn("parsed", parser.parsed(col(spec.parseCol)))
     val kept =
       if (spec.grep.isEmpty) target
       else target.filter(Grep.keepPredicate(spec.grep,

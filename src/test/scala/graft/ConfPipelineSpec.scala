@@ -65,7 +65,8 @@ class ConfPipelineSpec extends AnyFunSuite {
     assert(row.getAs[String]("pri") == "13")
     assert(row.getAs[String]("message") == "something happened")
     // no-year + fixed offset → reference vector epoch (parser.c:69)
-    val ts = df.select(unix_timestamp(p.eventTime(col("raw"))).as("s")).collect()(0)
+    val ts = df.select(unix_timestamp(p.eventTimeOf(p.parsedWithTime(col("raw")))).as("s"))
+      .collect()(0)
     assert(ts.getLong(0) == 1487239618L)
   }
 
@@ -484,8 +485,7 @@ class ConfPipelineSpec extends AnyFunSuite {
 
   test("regex census: the conf input path matches the parser's pattern once per line") {
     import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
-    import graft.functions.{RegexExtractStruct, RegexParse, RegexParseField}
+    import org.apache.spark.sql.execution.UnionExec
     val dir = Files.createTempDirectory("graft-conf-census").toString
     Files.createDirectories(Paths.get(dir, "web"))
     Files.createDirectories(Paths.get(dir, "api"))
@@ -514,17 +514,13 @@ class ConfPipelineSpec extends AnyFunSuite {
          |    Remove_key file
          |    Record     env bench
          |""".stripMargin
-    def regexes(p: SparkPlan): Int = p.collect { case n =>
-      n.expressions.map(_.collect {
-        case _: RegexParse | _: RegexParseField | _: RegexExtractStruct => ()
-      }.size).sum
-    }.sum
     def census(s: SparkSession): Unit = {
       val filtered = ConfPipeline.load(s, conf, parsersConf).filtered
       val plan = PlanNodes.stripAQEPlan(filtered.queryExecution.executedPlan)
       val branches = plan.collect { case u: UnionExec => u.children }.flatten
+        .map(_.collect { case n => n })
       assert(branches.size == 2, plan)
-      assert(branches.map(regexes) == Seq(1, 1), plan)
+      assert(branches.map(PlanNodes.regexes) == Seq(1, 1), plan)
       // the 2xx lines are gone, every kept line carries its parsed time
       val rows = filtered.select("tag", "code", "ts").collect()
       assert(rows.map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==
@@ -540,6 +536,58 @@ class ConfPipelineSpec extends AnyFunSuite {
       SparkSession.setActiveSession(spark)
       SparkSession.setDefaultSession(spark)
     }
+  }
+
+  test("json census: a conf json input parses each line once, time included") {
+    import org.apache.spark.sql.execution.UnionExec
+    val dir = Files.createTempDirectory("graft-conf-json").toString
+    Files.createDirectories(Paths.get(dir, "docker"))
+    Files.createDirectories(Paths.get(dir, "app"))
+    def line(i: Int) =
+      s"""{"log":"line $i","stream":"stdout","time":"2017-07-17T20:17:03.$i"}"""
+    Files.writeString(Paths.get(dir, "docker", "a.log"), Seq(1, 2).map(line).mkString("", "\n", "\n"))
+    Files.writeString(Paths.get(dir, "app", "a.log"), line(3) + "\n")
+    // docker keeps the time key (Time_Keep On), json drops it
+    val parsers =
+      """[PARSER]
+        |    Name        docker
+        |    Format      json
+        |    Time_Key    time
+        |    Time_Format %Y-%m-%dT%H:%M:%S.%L
+        |    Time_Keep   On
+        |[PARSER]
+        |    Name        json
+        |    Format      json
+        |    Time_Key    time
+        |    Time_Format %Y-%m-%dT%H:%M:%S.%L
+        |""".stripMargin
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/docker/*.log
+         |    Tag    docker.log
+         |    Parser docker
+         |[INPUT]
+         |    Name   tail
+         |    Path   $dir/app/*.log
+         |    Tag    app.log
+         |    Parser json
+         |""".stripMargin
+    val filtered = ConfPipeline.load(spark, conf, parsers).filtered
+    val plan = PlanNodes.stripAQEPlan(filtered.queryExecution.executedPlan)
+    val branches = plan.collect { case u: UnionExec => u.children }.flatten
+      .map(_.collect { case n => n })
+    assert(branches.size == 2, plan)
+    branches.foreach { b =>
+      val n = PlanNodes.parses(b)
+      assert((n("JsonToStructs"), n("GetJsonObject")) == ((1, 0)), plan)
+    }
+    val rows = filtered.select("tag", "log", "time", "ts").collect()
+      .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)), r.getTimestamp(3).getTime))
+    assert(rows.sortBy(_._2).toSeq == Seq(
+      ("docker.log", "line 1", Some("2017-07-17T20:17:03.1"), 1500322623100L),
+      ("docker.log", "line 2", Some("2017-07-17T20:17:03.2"), 1500322623200L),
+      ("app.log", "line 3", None, 1500322623300L)))
   }
 
   test("flowcounter output returns its record count, not its bucket count") {

@@ -76,6 +76,25 @@ class EnrichSpec extends AnyFunSuite {
     assert(got(3).isEmpty)
   }
 
+  test("annotation parser keys are the parse's output keys: aliased groups, json without its time key") {
+    import graft.parsers.Parsers
+    val kube = "var.log.containers.web-3_default_nginx-" + hex + ".log"
+    val json = """{"log":"hi","stream":"stdout","time":"17/Jul/2017:20:17:03 +0000"}"""
+    val df = Seq(
+      (1, kube, Map("fluentbit.io/parser" -> "kube")),
+      (2, json, Map("fluentbit.io/parser" -> "json"))
+    ).toDF("id", "raw", "annotations")
+      .withColumn("kubernetes", struct(col("annotations")))
+    val out = Enrich.annotationParser(df, "raw",
+      Map("kube" -> Parsers.kubeTag, "json" -> Parsers.jsonGeneric))
+    val got = out.select("id", "parsed_by_annotation").collect()
+      .map(r => r.getInt(0) -> r.getMap[String, String](1).toMap).toMap
+    assert(got(1) == Map("pod_name" -> "web-3", "namespace_name" -> "default",
+      "container_name" -> "nginx", "docker_id" -> hex))
+    // Time_Keep off: the time key is not a record key
+    assert(got(2) == Map("log" -> "hi", "stream" -> "stdout"))
+  }
+
   test("enrich plan uses a broadcast hash join (no shuffle of the fact side)") {
     val facts = Seq((tag("web-1", "default"), 1)).toDF("tag", "v")
     val dim = Seq(("web-1_default", Map.empty[String, String], Map.empty[String, String]))

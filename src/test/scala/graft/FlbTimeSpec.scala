@@ -89,9 +89,10 @@ class FlbTimeSpec extends AnyFunSuite {
       assert(nsec == 0)
       assert(ts == sec)
     }
-    // one parse: exactly one RegexParse in the plan (fused; time kept)
-    val nParses = "RegexParse|regexparse".r
-      .findAllIn(out.queryExecution.optimizedPlan.toString).size
-    assert(nParses >= 1)
+    // one parse: the fields and the time come out of one regex match
+    assert(PlanNodes.regexes(PlanNodes.of(out)) == 1, out.queryExecution.executedPlan)
+    // the parse follows the parser's Time_Keep: no time field, no #time
+    assert(out.schema("parsed").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fieldNames.toSeq == spec.parser.outputNames)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.functions.RegexExtractStruct
+import graft.functions.{ParsedField, RegexParse}
 import graft.parsers.Parsers
 import graft.enrich.Enrich
 
@@ -24,7 +24,9 @@ class ParseSpec extends AnyFunSuite {
     assert(row.getAs[Long]("size") == 1234L)
     // time key dropped (time_keep=false) — not a struct field
     assert(!row.schema.fieldNames.contains("time"))
-    val ts = df.select(unix_timestamp(Parsers.apache.eventTime(col("raw"))).as("s")).collect()(0)
+    val p = Parsers.apache
+    val ts = df.select(unix_timestamp(p.eventTimeOf(p.parsedWithTime(col("raw")))).as("s"))
+      .collect()(0)
     assert(ts.getLong(0) == 1500322623L)
   }
 
@@ -62,10 +64,12 @@ class ParseSpec extends AnyFunSuite {
     assert(row.schema.fieldNames.contains("time")) // Time_Keep On
   }
 
-  test("RegexExtractStruct compiles once and runs under codegen") {
+  test("RegexParse compiles once and runs under codegen") {
     val df = spark.range(1000).select(
       concat(lit("id-"), col("id").cast("string")).as("s"))
-    val out = df.select(RegexExtractStruct(col("s"), "^id-(?<n>\\d+)$").as("m"))
+    val pattern = "^id-(?<n>\\d+)$"
+    val out = df.select(RegexParse(col("s"), pattern,
+        RegexParse.groupNamesOf(pattern).map(ParsedField(_))).as("m"))
       .select(col("m.n").cast("long").as("n"))
     assert(out.agg(sum("n")).collect()(0).getLong(0) == 499500L)
   }
@@ -77,7 +81,8 @@ class ParseSpec extends AnyFunSuite {
     val row = df.select(p.parsed(col("raw")).as("p")).select("p.*").collect()(0)
     assert(row.getAs[String]("log") == "hi\n")
     assert(row.getAs[String]("stream") == "stdout")
-    val us = df.select(unix_micros(p.eventTime(col("raw"))).as("us")).collect()(0).getLong(0)
+    val us = df.select(unix_micros(p.eventTimeOf(p.parsedWithTime(col("raw")))).as("us"))
+      .collect()(0).getLong(0)
     assert(us == 1500322623500000L)
   }
 }

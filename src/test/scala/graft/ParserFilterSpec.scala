@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.core.TimeParse
 import graft.functions.Decoders
 import graft.operators.{Multiline, ParserFilter}
-import graft.parsers.Parsers
+import graft.parsers.{JsonFormat, ParserDef, Parsers, RegexFormat}
 
 /** filter_parser Reserve_Data/Preserve_Key matrix (FIXTURES §5,
   * `plugins/filter_parser/filter_parser.c:220-300`), decoder backends, and
@@ -78,9 +80,17 @@ class ParserFilterSpec extends AnyFunSuite {
       (2, "garbage"),                                   // the pattern misses
       (3, clf.replace("17/Jul/2017", "17/Foo/2017")),   // the time does not parse
       (4, clf.replace("+0000", "-0230")),
-      (5, null))
+      (5, null),
+      (6, """<34>1 2017-07-17T20:17:03.250 host app 1234 ID47 - hello world"""),
+      (7, """{"log":"a","stream":"stdout","time":"2017-07-17T20:17:03.5"}"""),
+      (8, """{"log":"b","time":"17/Jul/2017:20:17:03 +0100"}"""),
+      (9, """{"log":"c","time":17}"""),                  // a number, not a time
+      (10, """{"log":"d"}"""),                           // no time key
+      (11, """{"log":"""))                               // not json
     val df = lines.toDF("id", "line").repartition(2)
     val apache = Parsers.apache
+    val noTimeField = Some(StructType(Seq(
+      StructField("log", StringType), StructField("stream", StringType))))
     val parsers = Seq(
       apache,
       apache.copy(timeKeep = true),
@@ -88,15 +98,38 @@ class ParserFilterSpec extends AnyFunSuite {
       apache.copy(timeKeep = true, types = apache.types + ("time" -> "integer")),
       apache.copy(timeOffsetSec = 3600),
       Parsers.syslogRfc5424,
-      Parsers.docker)
+      Parsers.docker,
+      Parsers.jsonGeneric,
+      // Time_Key with no field for it in the json schema
+      Parsers.jsonGeneric.copy(jsonSchema = noTimeField),
+      Parsers.docker.copy(jsonSchema = noTimeField))
+    // the expected time, built apart from the parse under test: the time
+    // group of a driver-side java.util.regex match, or get_json_object's
+    // read of the time key, parsed by TimeParse
+    def want(p: ParserDef): Map[Int, Option[java.sql.Timestamp]] = {
+      val tk = p.timeKey.get
+      val timeStr = p.format match {
+        case RegexFormat =>
+          val rx = java.util.regex.Pattern.compile(p.cleanRegex)
+          lines.map { case (id, l) =>
+            val m = Option(l).map(rx.matcher).filter(_.find())
+            (id, m.map(_.group(tk)).orNull)
+          }.toDF("id", "s")
+        case JsonFormat => df.select(col("id"), get_json_object(col("line"), s"$$.$tk").as("s"))
+      }
+      timeStr.select(col("id"), TimeParse.parse(col("s"), p.timeFormat.get, p.timeOffsetSec))
+        .as[(Int, Option[java.sql.Timestamp])].collect().toMap
+    }
     parsers.foreach { p =>
       val got = ParserFilter.flatten("line", p, tsCol = Some("ts"))(df)
-        .withColumn("want", p.eventTime(col("line")))
-        .select("id", "ts", "want").as[(Int, Option[java.sql.Timestamp], Option[java.sql.Timestamp])]
+        .select("id", "ts").as[(Int, Option[java.sql.Timestamp])]
         .collect().sortBy(_._1).toSeq
+      val expected = want(p)
       assert(got.map(_._1) == lines.map(_._1))
-      got.foreach { case (id, ts, want) => assert(ts == want, s"${p.name} ${p.types} row $id") }
-      assert(got.head._2.isDefined || p == Parsers.syslogRfc5424 || p == Parsers.docker)
+      got.foreach { case (id, ts) =>
+        assert(ts == expected(id), s"${p.name} ${p.types} ${p.jsonSchema} row $id") }
+      assert(got.head._2.isDefined || p == Parsers.syslogRfc5424 || p.format == JsonFormat)
+      assert(got.exists(_._2.isDefined), s"${p.name} ${p.jsonSchema} stamps no row")
     }
     // the time column stays only under Time_Keep, typed per Types
     val kept = ParserFilter.flatten("line", apache.copy(timeKeep = true,

@@ -13,7 +13,6 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{RegexParse, RegexParseField}
 import graft.operators.Grep
 import graft.route.SinkSpec
 import graft.run.{Pipeline, PipelineSpec}
@@ -46,9 +45,6 @@ class PlanAuditSpec extends AnyFunSuite {
     out
   }
 
-  private def regexes(p: SparkPlan): Int =
-    p.expressions.map(_.collect { case _: RegexParse | _: RegexParseField => () }.size).sum
-
   private def isPartial(h: HashAggregateExec): Boolean =
     h.aggregateExpressions.nonEmpty && h.aggregateExpressions.forall(_.mode == Partial)
 
@@ -57,7 +53,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the grep predicate — a two-reference predicate doubles the parse
     val out = headlineRun(withEnrich = false)
     PlanNodes.sections(out).foreach { nodes =>
-      val n = nodes.map(regexes).sum
+      val n = PlanNodes.regexes(nodes)
       // one, not none: the grep reads the parsed `code`
       assert(n == 1, s"$n apache regex parse expressions:\n${out.queryExecution.executedPlan}")
     }
@@ -94,7 +90,7 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(at >= 0, s"no codegen stage holds the $what:\n$plan")
       at
     }
-    val grep = stageOf("grep filter") { case f: FilterExec => regexes(f) > 0 }
+    val grep = stageOf("grep filter") { case f: FilterExec => PlanNodes.regexes(Seq(f)) > 0 }
     assert(stageOf("fan-out generate") { case _: GenerateExec => true } == grep, plan)
     assert(stageOf("partial aggregate") { case h: HashAggregateExec => isPartial(h) } == grep, plan)
     assert(stages(grep).exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
   BroadcastQueryStageExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+
+import graft.functions.{RegexParse, RegexParseField}
 
 /** Physical-plan nodes for plan assertions, walked as a tree instead of
   * matched in `executedPlan.toString`. Spark's helper sees through the
@@ -49,5 +52,27 @@ object PlanNodes extends AdaptiveSparkPlanHelper {
       case _ => p +: p.children.flatMap(walk)
     }
     walk(df.queryExecution.executedPlan)
+  }
+
+  /** The regex and JSON parse expressions that `nodes` hold, counted by
+    * kind: `RegexParse` (a full match), `RegexParseField` (a match for one
+    * field), `JsonToStructs` (`from_json`) and `GetJsonObject`
+    * (`get_json_object`). Every copy in an expression tree counts, also
+    * in a file scan's `DataFilters`, which the scan itself does not run;
+    * a kind the nodes lack counts 0.
+    */
+  def parses(nodes: Seq[SparkPlan]): Map[String, Int] =
+    nodes.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: RegexParse | _: RegexParseField | _: JsonToStructs | _: GetJsonObject) =>
+        e.nodeName
+    })).groupBy(identity).map { case (k, v) => k -> v.size }.withDefaultValue(0)
+
+  /** [[parses]] of `df`'s executed plan. */
+  def parses(df: DataFrame): Map[String, Int] = parses(of(df))
+
+  /** Regex matches per row that `nodes` hold: full and single-field parses. */
+  def regexes(nodes: Seq[SparkPlan]): Int = {
+    val n = parses(nodes)
+    n("RegexParse") + n("RegexParseField")
   }
 }

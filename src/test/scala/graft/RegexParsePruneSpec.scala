@@ -34,11 +34,9 @@ class RegexParsePruneSpec extends AnyFunSuite {
 
   test("single-field consumer is pruned to regexparsefield, values identical") {
     val one = parsed.select(col("idx"), col("parsed").getField("code").as("code"))
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("regexparsefield"),
-      s"prune rule did not fire:\n$plan")
-    assert(!"""\bregexparse\(""".r.findFirstIn(plan.toLowerCase).isDefined,
-      s"full struct parse survived a single-field consumer:\n$plan")
+    val n = PlanNodes.parses(one)
+    assert(n("RegexParseField") > 0, s"prune rule did not fire:\n$n")
+    assert(n("RegexParse") == 0, s"full struct parse survived a single-field consumer:\n$n")
     assert(one.orderBy("idx").as[(Int, Option[Long])].collect().map(_._2).toSeq ==
       Seq(Some(200L), Some(404L), None, Some(500L)))
   }
@@ -53,15 +51,14 @@ class RegexParsePruneSpec extends AnyFunSuite {
       col("parsed").getField("code").as("code"),
       col("parsed").getField("ratio").as("ratio"),
       col("parsed").getField("note").as("note")).orderBy("idx")
-    val mPlan = multi.queryExecution.executedPlan.toString.toLowerCase
-    assert(!mPlan.contains("regexparsefield"),
-      s"multi-field consumer must keep the shared full parse:\n$mPlan")
+    val mParses = PlanNodes.parses(multi)
+    assert(mParses("RegexParseField") == 0,
+      s"multi-field consumer must keep the shared full parse:\n$mParses")
     val expect = multi.collect().map(r => (r.get(1), r.get(2), r.get(3), r.get(4)))
 
     val prunedCols = Seq("host", "code", "ratio", "note").map { f =>
       val one = parsed.select(col("idx"), col("parsed").getField(f).as(f))
-      assert(one.queryExecution.executedPlan.toString.toLowerCase
-        .contains("regexparsefield"), s"no prune for $f")
+      assert(PlanNodes.parses(one)("RegexParseField") > 0, s"no prune for $f")
       one.orderBy("idx").collect().map(_.get(1))
     }
     val got = prunedCols(0).indices
@@ -80,17 +77,16 @@ class RegexParsePruneSpec extends AnyFunSuite {
     val two = df.select(col("idx"),
       RegexParse(col("line"), pattern, fields).getField("host").as("host"),
       RegexParse(col("line"), pattern, fields).getField("code").as("code"))
-    val plan = two.queryExecution.executedPlan.toString.toLowerCase
-    assert(!plan.contains("regexparsefield"),
-      s"multi-ordinal inline consumer was rewritten:\n$plan")
+    val twoParses = PlanNodes.parses(two)
+    assert(twoParses("RegexParseField") == 0,
+      s"multi-ordinal inline consumer was rewritten:\n$twoParses")
     assert(two.orderBy("idx").as[(Int, String, Option[Long])].collect().toSeq ==
       Seq((0, "alpha", Some(200L)), (1, "beta", Some(404L))))
     // same-ordinal duplicates remain eligible: both copies read `code`
     val same = df.select(col("idx"),
       RegexParse(col("line"), pattern, fields).getField("code").as("c1"),
       RegexParse(col("line"), pattern, fields).getField("code").as("c2"))
-    assert(same.queryExecution.executedPlan.toString.toLowerCase
-      .contains("regexparsefield"))
+    assert(PlanNodes.parses(same)("RegexParseField") > 0)
     assert(same.orderBy("idx").as[(Int, Option[Long], Option[Long])].collect().toSeq ==
       Seq((0, Some(200L), Some(200L)), (1, Some(404L), Some(404L))))
   }
@@ -107,9 +103,8 @@ class RegexParsePruneSpec extends AnyFunSuite {
     val out = Pipeline.transform(t, spec)
       .groupBy(col("sink")).agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("s"))
     val rows = out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val plan = out.queryExecution.executedPlan.toString.toLowerCase
-    assert(plan.contains("regexparsefield"),
-      s"headline grep filter not pruned:\n$plan")
+    val outParses = PlanNodes.parses(out)
+    assert(outParses("RegexParseField") > 0, s"headline grep filter not pruned:\n$outParses")
     // 200 rows, code cycle seq%6∈{4,5}→5xx: 66 matches, each fans out to
     // its source sink + sink_all
     assert(rows("sink_all") == 66L)
