@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** The reference's time envelope, `struct flb_time { tv_sec, tv_nsec }`
   * (`include/fluent-bit/flb_time.h:30-38`), as a Spark column:
@@ -18,6 +19,10 @@ import org.apache.spark.sql.functions._
   * big-endian uint32 seconds ++ big-endian uint32 nanoseconds.
   */
 object FlbTime {
+
+  /** The envelope's type. */
+  val Type: StructType =
+    StructType(Seq(StructField("sec", LongType), StructField("nsec", IntegerType)))
 
   /** Build the envelope from second/nanosecond columns. */
   def apply(sec: Column, nsec: Column): Column =

@@ -1,7 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+
+import graft.functions.Strptime
 
 /** strptime-subset → Spark timestamp parsing.
   *
@@ -15,8 +16,11 @@ import org.apache.spark.sql.functions._
   *   3. `%z` accepts ±HH:MM, ±HHMM and `Z` (`flb_parser.c:562-608`), or a
   *      fixed `Time_Offset` config.
   *
-  * Everything compiles to built-in column expressions (`to_timestamp`,
-  * `regexp_extract`, `timestampadd`) — codegen'd, no UDF.
+  * Both readers are one [[graft.functions.Strptime]] expression: the
+  * format compiles once into a directive array and each row is one
+  * generated-code walk over the time string's bytes. The time is read as
+  * UTC plus its `%z` or `Time_Offset`, whatever the session time zone
+  * says.
   */
 object TimeParse {
 
@@ -46,78 +50,6 @@ object TimeParse {
     } catch { case _: Exception => 0 }
   }
 
-  // permissive single-letter day/hour/min/sec variants: strptime accepts
-  // both zero- and space-padded fields (syslog "%b %d" emits "Feb  6")
-  private val strpMap: Seq[(String, String)] = Seq(
-    "%Y" -> "yyyy", "%m" -> "M", "%d" -> "d", "%e" -> "d",
-    "%H" -> "H", "%M" -> "m", "%S" -> "s", "%b" -> "MMM",
-    "%B" -> "MMMM", "%y" -> "yy", "%j" -> "D",
-    "%T" -> "H:m:s", "%z" -> "xx", "%Z" -> "zz"
-  )
-
-  /** Translate a strptime format to a Spark datetime pattern. `%L` must be
-    * stripped by the caller (handled via fraction arithmetic).
-    */
-  def toSparkPattern(fmt: String): String = {
-    // Escape pattern-letter literals (T etc.) by quoting every run of
-    // characters that is not a %-directive or separator.
-    val out = new StringBuilder
-    var i = 0
-    while (i < fmt.length) {
-      if (fmt.charAt(i) == '%' && i + 1 < fmt.length) {
-        val d = fmt.substring(i, i + 2)
-        strpMap.find(_._1 == d) match {
-          case Some((_, sp)) => out.append(sp)
-          case None          => out.append(d.charAt(1)) // unknown directive: literal
-        }
-        i += 2
-      } else {
-        val c = fmt.charAt(i)
-        if (c.isLetter) out.append('\'').append(c).append('\'')
-        else out.append(c)
-        i += 1
-      }
-    }
-    out.toString.replace("''", "") // merge adjacent quoted literals
-  }
-
-  /** Shared parse core: (whole-second timestamp, fractional-digit string).
-    * The fraction keeps its raw digits so callers pick their resolution
-    * (µs for Spark timestamps, ns for the flb_time envelope).
-    */
-  private def parseParts(raw: Column, fmt: String, tzOffsetSec: Int): (Column, Column) = {
-    val hasYear = fmt.contains("%Y") || fmt.contains("%y")
-    val hasFrac = fmt.contains("%L")
-    val hasTz = fmt.contains("%z")
-
-    // 1. normalize the raw string: collapse multi-space (rfc3164 day
-    //    padding), normalize tz ±HH:MM → ±HHMM and trailing Z → +0000.
-    var s = regexp_replace(raw, "  +", " ")
-    if (hasTz) {
-      s = regexp_replace(s, "([+-]\\d{2}):(\\d{2})$", "$1$2")
-      s = regexp_replace(s, "Z$", "+0000")
-    }
-    // 2. fractional seconds: pull out and strip
-    val frac =
-      if (hasFrac) coalesce(regexp_extract(s, "\\.(\\d+)", 1).cast("string"), lit(""))
-      else lit("")
-    if (hasFrac) s = regexp_replace(s, "\\.\\d+", "")
-
-    // 3. year injection for no-%Y formats
-    val (fmt2, s2) =
-      if (hasYear) (fmt, s)
-      else ("%Y " + fmt, concat(lit(s"$RefYear "), s))
-    val pattern = toSparkPattern(fmt2.replace(".%L", "").replace("%L", ""))
-
-    // a time that does not parse gives null, not a failed job (ANSI
-    // `to_timestamp` throws): the record keeps going without a parsed time
-    val base = try_to_timestamp(s2, lit(pattern))
-    val shifted =
-      if (hasTz || tzOffsetSec == 0) base
-      else timestamp_micros(unix_micros(base) - tzOffsetSec * 1000000L)
-    (shifted, frac)
-  }
-
   /** Parse `raw` with strptime format `fmt`.
     *
     * @param fmt       strptime format, possibly containing `%L` and/or
@@ -128,26 +60,16 @@ object TimeParse {
     * @return TimestampType column (µs precision — Spark's native
     *         resolution; [[parseNs]] carries the full flb_time envelope).
     */
-  def parse(raw: Column, fmt: String, tzOffsetSec: Int = 0): Column = {
-    val (shifted, frac) = parseParts(raw, fmt, tzOffsetSec)
-    if (fmt.contains("%L")) {
-      val micros = (concat(lit("0."), when(frac === "", "0").otherwise(frac)).cast("double") * 1000000L).cast("long")
-      timestamp_micros(unix_micros(shifted) + micros)
-    } else shifted
-  }
+  def parse(raw: Column, fmt: String, tzOffsetSec: Int = 0): Column =
+    Strptime(raw, fmt, tzOffsetSec, nanos = false)
 
   /** Parse to the full-precision `struct<sec:long, nsec:int>` envelope
     * (`struct flb_time`, reference `include/fluent-bit/flb_time.h:30-38`):
     * `%L` digits are kept at NANOSECOND resolution (`flb_parser.c:679-709`
     * hand-parses up to 9 fraction digits), which µs `TimestampType` would
-    * truncate. Derive a windowing timestamp with [[FlbTime.toTimestamp]].
+    * truncate. Null when the time does not parse. Derive a windowing
+    * timestamp with [[FlbTime.toTimestamp]].
     */
-  def parseNs(raw: Column, fmt: String, tzOffsetSec: Int = 0): Column = {
-    val (shifted, frac) = parseParts(raw, fmt, tzOffsetSec)
-    val nsec =
-      if (!fmt.contains("%L")) lit(0L)
-      else when(frac === "", 0L)
-        .otherwise(rpad(substring(frac, 1, 9), 9, "0").cast("long"))
-    FlbTime(unix_seconds(shifted), nsec)
-  }
+  def parseNs(raw: Column, fmt: String, tzOffsetSec: Int = 0): Column =
+    Strptime(raw, fmt, tzOffsetSec, nanos = true)
 }

@@ -91,7 +91,7 @@ object Enrich {
     val parsed = parsers.foldRight(lit(null).cast("map<string,string>")) {
       case ((name, p), rest) =>
         val st = p.parsed(col(rawCol))
-        when(pname === name, when(st.isNotNull, ParserFilter.structToMap(p, st))).otherwise(rest)
+        when(pname === name, when(p.parseOk(st), ParserFilter.structToMap(p, st))).otherwise(rest)
     }
     df.withColumn("parsed_by_annotation", parsed)
   }

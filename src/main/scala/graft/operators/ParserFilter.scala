@@ -55,7 +55,7 @@ object ParserFilter {
           if (preserveKey)
             map_concat(map_filter(base, (k, _) => k =!= keyName), map(lit(keyName), raw))
           else base
-        when(raw.isNotNull && col("_p").isNotNull, withKey).otherwise(rec)
+        when(raw.isNotNull && parser.parseOk(col("_p")), withKey).otherwise(rec)
       })
       .drop("_p")
     out
@@ -95,7 +95,7 @@ object ParserFilter {
         case _              => d
       }
     }
-    val withOk = withCols.withColumn("parse_ok", col("_p").isNotNull)
+    val withOk = withCols.withColumn("parse_ok", parser.parseOk(col("_p")))
     val withTs = stamp.fold(withOk) { t =>
       val ts = parser.eventTimeOf(col("_p"))
       withOk.withColumn(t, if (withOk.columns.contains(t)) coalesce(ts, col(t)) else ts)

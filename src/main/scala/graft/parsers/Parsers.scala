@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.TimeParse
+import graft.core.{FlbTime, TimeParse}
 import graft.functions.{ParsedField, RegexParse}
 
 /** Parser definitions — the Spark restatement of the reference's parser
@@ -61,7 +61,8 @@ final case class ParserDef(
     * ONE expression, one regex match or JSON parse per row: [[RegexParse]]
     * fuses the extraction with the casts so the compiled pattern never
     * evaluates more than once per record; a json parser reads only the
-    * kept fields of its schema.
+    * kept fields of its schema, plus [[ParserDef.CorruptField]]. Test
+    * success with [[parseOk]].
     */
   def parsed(raw: Column): Column = format match {
     case RegexFormat => RegexParse(raw, cleanRegex, keptFields)
@@ -76,9 +77,23 @@ final case class ParserDef(
     jsonSchema.fold(Seq.empty[StructField])(_.fields.toSeq)
       .filter(f => timeKeep || !timeKey.contains(f.name))
 
+  /** `from_json` over `fields` plus [[ParserDef.CorruptField]], which
+    * holds the line when it is not JSON (Spark's PERMISSIVE mode gives a
+    * struct of nulls, not null, for such a line).
+    */
   private def jsonParse(raw: Column, fields: Seq[StructField]): Column = {
     require(jsonSchema.isDefined, s"parser $name: json format needs jsonSchema")
-    from_json(raw, StructType(fields))
+    from_json(raw, StructType(fields :+ StructField(ParserDef.CorruptField, StringType)),
+      Map("columnNameOfCorruptRecord" -> ParserDef.CorruptField))
+  }
+
+  /** The [[parsed]] or [[parsedWithTime]] struct `p` holds a parsed record:
+    * the regex matched, or the line is JSON. The reference passes a record
+    * whose parse fails through unchanged (`filter_parser.c`).
+    */
+  def parseOk(p: Column): Column = format match {
+    case RegexFormat => p.isNotNull
+    case JsonFormat  => p.isNotNull && p.getField(ParserDef.CorruptField).isNull
   }
 
   /** Both Time_Key and Time_Format are set: a parse stamps the event time. */
@@ -118,7 +133,8 @@ final case class ParserDef(
         // a struct cast renames by position: one from_json, no field copies
         val kept = keptJsonFields
         jsonParse(raw, kept :+ StructField(timeKey.get, StringType))
-          .cast(StructType(kept :+ StructField(ParserDef.TimeField, StringType)))
+          .cast(StructType(kept :+ StructField(ParserDef.TimeField, StringType) :+
+            StructField(ParserDef.CorruptField, StringType)))
     }
 
   /** Event time of a record whose [[parsedWithTime]] struct is `p`, read
@@ -135,7 +151,7 @@ final case class ParserDef(
     */
   def eventTimeNsOf(p: Column): Column = (timeField, timeFormat) match {
     case (Some(f), Some(tf)) => TimeParse.parseNs(p.getField(f), tf, timeOffsetSec)
-    case _ => lit(null).cast("struct<sec:bigint,nsec:int>")
+    case _ => lit(null).cast(FlbTime.Type)
   }
 
   /** Output field names of [[parsed]] (record keys after alias restore). */
@@ -150,6 +166,9 @@ object ParserDef {
     * capture-group name, so it cannot collide with a regex parser's key.
     */
   val TimeField = "#time"
+
+  /** A json parse's corrupt-record field (see [[ParserDef.parseOk]]). */
+  val CorruptField = "#corrupt"
 }
 
 object Parsers {

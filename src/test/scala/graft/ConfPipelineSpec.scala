@@ -485,7 +485,7 @@ class ConfPipelineSpec extends AnyFunSuite {
 
   test("regex census: the conf input path matches the parser's pattern once per line") {
     import org.apache.spark.sql.SparkSession
-    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.{FilterExec, UnionExec}
     val dir = Files.createTempDirectory("graft-conf-census").toString
     Files.createDirectories(Paths.get(dir, "web"))
     Files.createDirectories(Paths.get(dir, "api"))
@@ -521,6 +521,21 @@ class ConfPipelineSpec extends AnyFunSuite {
         .map(_.collect { case n => n })
       assert(branches.size == 2, plan)
       assert(branches.map(PlanNodes.regexes) == Seq(1, 1), plan)
+      // the time parses in one Strptime per branch, inside generated code:
+      // no regexp_replace / regexp_extract / to_timestamp chain and no
+      // interpreted expression anywhere on the path
+      val fused = PlanNodes.codegenStages(filtered).flatten
+      branches.foreach { b =>
+        val n = PlanNodes.expressionClasses(b)
+        assert(Seq("RegExpReplace", "RegExpExtract", "GetTimestamp", "ParseToTimestamp").map(n)
+          == Seq(0, 0, 0, 0), plan)
+        assert(n("Strptime") == 1, plan)
+        val stamp = b.filter(p => PlanNodes.expressionClasses(Seq(p))("Strptime") > 0)
+        assert(stamp.forall(fused.contains), plan)
+        assert(PlanNodes.fallbacks(b).isEmpty, plan)
+        // above the grep Filter: only the kept lines parse their time
+        assert(stamp.forall(_.collectFirst { case f: FilterExec => f }.isDefined), plan)
+      }
       // the 2xx lines are gone, every kept line carries its parsed time
       val rows = filtered.select("tag", "code", "ts").collect()
       assert(rows.map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==

@@ -52,6 +52,23 @@ class FlbTimeSpec extends AnyFunSuite {
     assert(n2 == 500000000)
   }
 
+  test("parseNs of a time that does not parse is null as a whole, in the pipeline too") {
+    val fmt = "%Y-%m-%dT%H:%M:%S.%L"
+    // an impossible date, and no time string at all (a pattern miss)
+    val t = Seq(Some("2017-02-30T01:00:00.1"), None).toDF("raw")
+      .select(TimeParse.parseNs(col("raw"), fmt).isNull).as[Boolean].collect().toSeq
+    assert(t == Seq(true, true))
+    import graft.route.SinkSpec
+    import graft.run.{Pipeline, PipelineSpec}
+    val line = """h - u [%s +0000] "GET /x HTTP/1.1" 200 7"""
+    val in = Seq(("a", line.format("30/Feb/2017:20:17:03")), ("b", line.format("17/Jul/2017:20:17:03")))
+      .toDF("source", "doc_id")
+    val out = Pipeline.transform(in, PipelineSpec(sinks = Seq(SinkSpec("all", "*")), eventTimeNs = true))
+      .select(col("source"), col("event_time").isNull, col("event_ts").isNull)
+      .as[(String, Boolean, Boolean)].collect().sortBy(_._1).toSeq
+    assert(out == Seq(("a", true, true), ("b", false, false)))
+  }
+
   test("envelope round-trips through micros; no-%L formats carry nsec = 0") {
     val df = Seq(1500322623123456L).toDF("us")
     val t = df.select(FlbTime.fromMicros(col("us")).as("t"))

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.core.TimeParse
 import graft.functions.Decoders
 import graft.operators.{Multiline, ParserFilter}
 import graft.parsers.{JsonFormat, ParserDef, Parsers, RegexFormat}
@@ -105,7 +104,9 @@ class ParserFilterSpec extends AnyFunSuite {
       Parsers.docker.copy(jsonSchema = noTimeField))
     // the expected time, built apart from the parse under test: the time
     // group of a driver-side java.util.regex match, or get_json_object's
-    // read of the time key, parsed by TimeParse
+    // read of the time key, parsed by the old regexp_replace +
+    // try_to_timestamp chain (SparkPatternTime), which shares no code with
+    // the Strptime kernel that flatten runs
     def want(p: ParserDef): Map[Int, Option[java.sql.Timestamp]] = {
       val tk = p.timeKey.get
       val timeStr = p.format match {
@@ -117,7 +118,7 @@ class ParserFilterSpec extends AnyFunSuite {
           }.toDF("id", "s")
         case JsonFormat => df.select(col("id"), get_json_object(col("line"), s"$$.$tk").as("s"))
       }
-      timeStr.select(col("id"), TimeParse.parse(col("s"), p.timeFormat.get, p.timeOffsetSec))
+      timeStr.select(col("id"), SparkPatternTime.parse(col("s"), p.timeFormat.get, p.timeOffsetSec))
         .as[(Int, Option[java.sql.Timestamp])].collect().toMap
     }
     parsers.foreach { p =>
@@ -136,6 +137,20 @@ class ParserFilterSpec extends AnyFunSuite {
       types = apache.types + ("time" -> "integer")), tsCol = Some("ts"))(df)
     assert(kept.schema("time").dataType == org.apache.spark.sql.types.LongType)
     assert(!ParserFilter.flatten("line", apache, tsCol = Some("ts"))(df).columns.contains("time"))
+  }
+
+  test("json parser: a line that is not JSON is not parsed; onMap passes the record through") {
+    val lines = Seq("x", """{"log":"a","time":"17/Jul/2017:20:17:03 +0000"}""").toDF("line")
+    Seq(None, Some("ts")).foreach { ts =>
+      val got = ParserFilter.flatten("line", Parsers.jsonGeneric, tsCol = ts)(lines)
+        .select("line", "log", "parse_ok").as[(String, Option[String], Boolean)]
+        .collect().sortBy(_._1).toSeq
+      assert(got.map(r => (r._2, r._3)) == Seq((None, false), (Some("a"), true)), ts)
+    }
+    val rec = Seq(1).toDF("id")
+      .withColumn("record", map(lit("log"), lit("x"), lit("stream"), lit("stdout")))
+    assert(getMap(ParserFilter.onMap("record", "log", Parsers.jsonGeneric)(rec)) ==
+      Map("log" -> "x", "stream" -> "stdout"))
   }
 
   test("Reserve_Data with a parsed-but-NULL field does not duplicate the key (optional groups)") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, JsonToStructs}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
   BroadcastQueryStageExec, QueryStageExec}
@@ -69,6 +70,20 @@ object PlanNodes extends AdaptiveSparkPlanHelper {
 
   /** [[parses]] of `df`'s executed plan. */
   def parses(df: DataFrame): Map[String, Int] = parses(of(df))
+
+  /** The expressions that `nodes` hold, counted by class (simple name):
+    * every node of every expression tree, as [[parses]] counts parses; a
+    * class the nodes lack counts 0.
+    */
+  def expressionClasses(nodes: Seq[SparkPlan]): Map[String, Int] =
+    nodes.flatMap(_.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }))
+      .groupBy(identity).map { case (k, v) => k -> v.size }.withDefaultValue(0)
+
+  /** The expressions of `nodes` that generated code cannot compile and
+    * runs interpreted ([[CodegenFallback]]).
+    */
+  def fallbacks(nodes: Seq[SparkPlan]): Seq[Expression] =
+    nodes.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e }))
 
   /** Regex matches per row that `nodes` hold: full and single-field parses. */
   def regexes(nodes: Seq[SparkPlan]): Int = {
