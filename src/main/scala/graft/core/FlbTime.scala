@@ -38,9 +38,6 @@ object FlbTime {
     apply(longDiv(us - m, 1000000L), m * 1000L)
   }
 
-  /** Envelope from a TimestampType column. */
-  def fromTimestamp(ts: Column): Column = fromMicros(unix_micros(ts))
-
   /** µs count — ns truncated (Spark's native resolution). */
   def toMicros(t: Column): Column =
     t.getField("sec") * 1000000L + longDiv(t.getField("nsec"), 1000L)

@@ -20,9 +20,10 @@ import graft.core.{FlbTime, TimeParse}
   * over the input `UTF8String`'s bytes with no decode, no copy and no
   * allocation, then plain calendar arithmetic.
   *
-  * Directives: `%Y` (4 digits), `%y` (2 digits, 20yy), `%m %d %e %H %M %S`
-  * (1 or 2 digits), `%j` (1 to 3 digits), `%b` / `%B` (short / full English
-  * month name, any case), `%T` (`%H:%M:%S`), `%z` (`±HHMM`, `±HH:MM` or
+  * Directives: `%Y` (4 digits), `%y` (2 digits; 69–99 are 19yy and 00–68
+  * are 20yy, as glibc reads them), `%m %d %e %H %M %S` (1 or 2 digits),
+  * `%j` (1 to 3 digits), `%b` / `%B` (short / full English month name, any
+  * case), `%T` (`%H:%M:%S`), `%z` (`±HHMM`, `±HH:MM` or
   * `Z`, at most ±18:00), `%L` (fraction digits, first 9 kept at ns) and
   * `%%`. `.%L` is optional as a whole: a time without a fraction parses
   * with nsec 0. A space matches one or more spaces (rfc3164's `Feb  6`).
@@ -81,7 +82,7 @@ case class Strptime(child: Expression, format: String, tzOffsetSec: Int, nanos: 
           if (d < minW) return false
           (op: @switch) match {
             case Year      => year = v
-            case Year2     => year = 2000 + v
+            case Year2     => year = if (v < 69) 2000 + v else 1900 + v
             case Month     => month = v
             case Day       => day = v
             case Hour      => hour = v

@@ -27,8 +27,6 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = graft.functions.VecMathFunctions.dot(a, b)
 
-  def norm2(a: Column): Column = dot(a, a)
-
   /** Cosine similarity (null when either norm is 0) — dot and both norms
     * accumulated in ONE fused pass.
     */

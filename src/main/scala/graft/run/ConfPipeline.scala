@@ -568,24 +568,26 @@ object ConfPipeline {
               withTime, path, fmt, "tag", "_sec", "_nsec", valueCols)
           case "forward" =>
             // wire-format frames (sinks/Forward), parquet of binary frames
-            // — the serialization half of out_forward; no socket
+            // — the serialization half of out_forward; no socket. The
+            // event time rides beside the record as EventTime sec+nsec
+            // (forward.c:440-476), framed as for every byte sink
             val timeAsInt = o.options.get("time_as_integer").exists(_.equalsIgnoreCase("on"))
-            val recCols = rows.columns.filterNot(_ == "tag")
+            val (withTime, valueCols) = withFlbTime(rows)
             graft.sinks.Forward.frames(
-              rows.withColumn("_sec",
-                  if (rows.columns.contains("ts")) unix_timestamp(col("ts")) else lit(0L))
-                .withColumn("_nsec", lit(0))
-                .withColumn("_rec", map(recCols.flatMap(c =>
+              withTime
+                .withColumn("_rec", map(valueCols.flatMap(c =>
                   Seq(lit(c), col(c).cast("string"))): _*))
                 // DOCUMENTED DEVIATION: entry order within a frame is
-                // xxhash64 of the first record column — arbitrary but
-                // deterministic. The reference preserves chunk ARRIVAL
+                // xxhash64 of the event time and the record columns —
+                // arbitrary but deterministic, and defined for an empty
+                // record. The reference preserves chunk ARRIVAL
                 // order (msgpack buffer append order); a distributed
                 // shuffle has no arrival order to preserve, and no stable
                 // input ordinal survives the filter chain, so a content
                 // hash stands in. The conf-forward oracle and the frame
                 // round-trip specs compare under this same order.
-                .withColumn("_ord", xxhash64(col(recCols.head))),
+                .withColumn("_ord",
+                  xxhash64(col("_sec") +: col("_nsec") +: valueCols.map(col): _*)),
               "tag", "_sec", "_nsec", "_rec", "_ord", timeAsInteger = timeAsInt)
               .write.mode("overwrite").parquet(path)
           // payload-serialization sinks: the network client plugins with

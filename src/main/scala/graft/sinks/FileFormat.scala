@@ -31,6 +31,10 @@ import graft.functions.FlbJsonEscape
   * would need the double to sit exactly on an odd multiple of 2⁻⁷ — an
   * integral-µs value at epoch magnitude never lands there).
   *
+  * Every `{…}` record map, here and in [[Sinks]]' es/nats/http/splunk
+  * payloads, is built by [[recordMap]] (the one `flb_msgpack_to_json` /
+  * `msgpack_object_print` map writer of the reference).
+  *
   * Each line column EXCLUDES the trailing newline; [[writeExact]] emits it
   * via the text writer, matching the reference's per-record `\n`.
   */
@@ -79,14 +83,7 @@ object FileFormat {
             concat(render(e.getField("key"), kt, json), lit(kvSep),
               render(e.getField("value"), vt, json))), ", "),
           lit("}"))
-      case st: StructType =>
-        val kvSep = if (json) ":" else "=>"
-        val pairs = st.fields.toSeq.map { f =>
-          concat(lit("\"" + f.name + "\"" + kvSep),
-            render(c.getField(f.name), f.dataType, json))
-        }
-        if (pairs.isEmpty) lit("{}")
-        else concat(lit("{") +: interleave(", ", pairs) :+ lit("}"): _*)
+      case st: StructType => recordMap(Nil, st.fields.toSeq, json, c.getField)
       case _: DecimalType => c.cast("string")
       case TimestampType | DateType => concat(lit("\""), c.cast("string"), lit("\""))
       case other =>
@@ -96,7 +93,26 @@ object FileFormat {
   }
 
   private def printed(c: Column, dt: DataType): Column = render(c, dt, json = false)
-  private[sinks] def jsonVal(c: Column, dt: DataType): Column = render(c, dt, json = true)
+
+  /** The one record map every line sink prints: `{` + pairs joined by
+    * `", "` + `}`, where the pairs are `lead` (rendered by the caller —
+    * the ES `@timestamp`, the nats `tag`, the http date) and then one
+    * `"key"<sep>value` per field, value through [[render]]. `json` picks
+    * msgpack2json (`":"`, `flb_pack.c:462-481`) or `msgpack_object_print`
+    * (`"=>"`, `objectc.c:225-257`); `key` maps each field name to the
+    * printed key (ES `.`→`_`, `es.c:40-110`). Both forms write the braces
+    * around an empty map, so no pairs at all prints `{}`.
+    */
+  private[sinks] def recordMap(lead: Seq[Column], fields: Seq[StructField], json: Boolean,
+                               value: String => Column = col(_),
+                               key: String => String = identity): Column = {
+    val kvSep = if (json) ":" else "=>"
+    val pairs = lead ++ fields.map { f =>
+      concat(lit("\"" + key(f.name) + "\"" + kvSep), render(value(f.name), f.dataType, json))
+    }
+    if (pairs.isEmpty) lit("{}")
+    else concat(lit("{") +: interleave(", ", pairs) :+ lit("}"): _*)
+  }
 
   private def interleave(sep: String, parts: Seq[Column]): Seq[Column] =
     parts.flatMap(p => Seq(lit(sep), p)).tail
@@ -134,16 +150,9 @@ object FileFormat {
 
   /** json line (`file.c:216-229`): `tag: [%f, {"k":v, "k2":v2}]`. */
   def jsonLine(df: DataFrame, tagCol: String, secCol: String, nsecCol: String,
-               valueCols: Seq[String]): Column = {
-    val pairs = valueCols.map { c =>
-      concat(lit("\"" + c + "\":"), jsonVal(col(c), df.schema(c).dataType))
-    }
-    // an empty record prints as '{}' (msgpack2json writes the braces
-    // unconditionally, flb_pack.c:462-481)
-    val inner = if (pairs.isEmpty) lit("") else concat(interleave(", ", pairs): _*)
-    concat(col(tagCol), lit(": ["), timeDouble(col(secCol), col(nsecCol)),
-      lit(", {"), inner, lit("}]"))
-  }
+               valueCols: Seq[String]): Column =
+    concat(col(tagCol), lit(": ["), timeDouble(col(secCol), col(nsecCol)), lit(", "),
+      recordMap(Nil, valueCols.map(df.schema(_)), json = true), lit("]"))
 
   /** Write per-tag files with reference-exact bytes: one text line per
     * record (writer appends the `\n`), `partitionBy(tag)` so one job lays
@@ -172,15 +181,11 @@ object FileFormat {
     */
   def stdoutLine(df: DataFrame, cntCol: String, tagCol: String,
                  secCol: String, nsecCol: String,
-                 valueCols: Seq[String]): Column = {
-    val pairs = valueCols.map { c =>
-      concat(lit("\"" + c + "\"=>"), printed(col(c), df.schema(c).dataType))
-    }
-    val inner = if (pairs.isEmpty) lit("") else concat(interleave(", ", pairs): _*)
+                 valueCols: Seq[String]): Column =
     concat(lit("["), col(cntCol).cast("string"), lit("] "), col(tagCol),
       lit(": ["), col(secCol).cast("string"), lit("."),
-      lpad(col(nsecCol).cast("string"), 9, "0"), lit(", {"), inner, lit("}]"))
-  }
+      lpad(col(nsecCol).cast("string"), 9, "0"), lit(", "),
+      recordMap(Nil, valueCols.map(df.schema(_)), json = false), lit("]"))
 
   /** out_plot line (`plugins/out_plot/plot.c:160-171`): `%f <value>` —
     * one data point per record; the value must be integral (printed

@@ -262,21 +262,12 @@ object MsgpackDecode {
     f
   }
 
-  /** Unpack a STREAM of concatenated frames — the shape a forward-protocol
-    * socket connection delivers (msgpack objects are self-delimiting, so
-    * the wire needs no extra framing; `fw_prot.c` likewise iterates
-    * msgpack_unpack_next over the connection buffer).
-    */
-  def unpackFrames(bytes: Array[Byte]): Seq[(String, Seq[Entry])] = {
-    val c = new Cursor(bytes)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Entry])]
-    while (c.i < bytes.length) out += unpackFrameAt(c)
-    out.toSeq
-  }
-
-  /** Lenient stream unpack for UNTRUSTED wire bytes: frames decoded up to
-    * the first malformed or cut position, plus the count of skipped tail
-    * bytes. `fw_prot.c` likewise drops a bad connection's remainder and
+  /** Unpack a STREAM of concatenated frames from UNTRUSTED wire bytes —
+    * the shape a forward-protocol socket connection delivers (msgpack
+    * objects are self-delimiting, so the wire needs no extra framing;
+    * `fw_prot.c` likewise iterates msgpack_unpack_next over the connection
+    * buffer): frames decoded up to the first malformed or cut position,
+    * plus the count of skipped tail bytes. `fw_prot.c` likewise drops a bad connection's remainder and
     * keeps the engine running — a garbage payload (port scanner, wrong
     * protocol) must not fail a distributed decode job.
     */

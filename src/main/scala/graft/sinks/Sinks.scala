@@ -4,10 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Sink-side operators. Network connectors are out of scope (SURVEY §2.5);
-  * what remains is (a) per-sink file writes in the reference's three file
-  * formats, (b) the two aggregate sinks (`counter`, `flowcounter`) that
-  * form the per-sink correctness oracles, and (c) serializer transforms
-  * demonstrated by the ES output.
+  * what remains is (a) the two aggregate sinks (`counter`, `flowcounter`)
+  * that form the per-sink correctness oracles, and (b) the byte-exact
+  * record payloads of the network clients (es, influxdb, nats, http,
+  * splunk) plus kafka's topic pick. out_file and out_stdout lines live in
+  * [[FileFormat]]; every `{…}` record map below goes through
+  * [[FileFormat.recordMap]], which also applies the ES key sanitize
+  * (`.`→`_`, `es.c:40-110`).
   */
 object Sinks {
 
@@ -30,44 +33,17 @@ object Sinks {
     df.groupBy(bucket).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** `out_file` (`plugins/out_file/file.c`): per-tag files; formats json
-    * lines (`file.c:216-229`), csv (`:117-138`), ltsv (`:140-168`).
-    * Writes `partitionBy(sink)` so one job lays out every sink's directory.
-    */
-  def writeFiles(df: DataFrame, outDir: String, format: String = "json",
-                 sinkCol: String = "sink"): Unit = format match {
-    case "json" => df.write.mode("overwrite").partitionBy(sinkCol).json(outDir)
-    case "csv"  => df.write.mode("overwrite").partitionBy(sinkCol).csv(outDir)
-    case "ltsv" =>
-      // label-tab-separated: k1:v1 \t k2:v2 — text lines per record
-      val cols = df.columns.filterNot(_ == sinkCol)
-      val line = concat_ws("\t",
-        cols.map(c => concat(lit(c + ":"), col(c).cast("string"))): _*)
-      df.select(line.as("value"), col(sinkCol))
-        .write.mode("overwrite").partitionBy(sinkCol).text(outDir)
-  }
-
   /** `out_kafka` per-record topic selection (`kafka.c:104-133`): topic =
     * record[topicKey] if present else default.
     */
   def kafkaTopic(topicKeyCol: Column, defaultTopic: String): Column =
     coalesce(topicKeyCol, lit(defaultTopic))
 
-  /** ES key sanitize: dots→underscores recursively over keys
-    * (`plugins/out_es/es.c:40-110`) — here over a map column.
-    */
-  def esSanitizeKeys(m: Column): Column =
-    transform_keys(m, (k, _) => regexp_replace(k, "\\.", "_"))
-
   /** ES logstash-style daily index name `prefix-YYYY.MM.DD`
     * (`es.c:245-266`).
     */
   def esLogstashIndex(ts: Column, prefix: String): Column =
     concat(lit(prefix + "-"), date_format(ts, "yyyy.MM.dd"))
-
-  /** ES injected time field — ms precision ISO form (`es.c:208-241`). */
-  def esTimeKey(ts: Column): Column =
-    date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSS")
 
   /** One ES Bulk-API chunk per record (`plugins/out_es/es_bulk.h:27-28` +
     * `es.c:229-287`): the index action line
@@ -88,22 +64,14 @@ object Sinks {
                   valueCols: Seq[String], index: Column,
                   esType: String = "flb_type",
                   id: Option[Column] = None): Column = {
-    import org.apache.spark.sql.types._
-    val ts = concat(
+    val ts = concat(lit("\"@timestamp\":\""),
       date_format(timestamp_seconds(col(secCol)), "yyyy-MM-dd'T'HH:mm:ss"),
       lit("."),
       (col(nsecCol).cast("long") / 1000000L).cast("long").cast("string"),
-      lit("Z"))
-    val pairs = valueCols.map { c =>
-      concat(lit("\"" + c.replace('.', '_') + "\":"),
-        FileFormat.jsonVal(col(c), df.schema(c).dataType))
-    }
-    // empty record: map(0+1) holds only the timestamp entry
-    val recordParts =
-      if (pairs.isEmpty) Seq(lit("{\"@timestamp\":\""), ts, lit("\"}"))
-      else Seq(lit("{\"@timestamp\":\""), ts, lit("\", ")) ++
-        pairs.flatMap(p => Seq(p, lit(", "))).dropRight(1) ++ Seq(lit("}"))
-    val record = concat(recordParts: _*)
+      lit("Z\""))
+    // an empty record is map(0+1): the timestamp entry alone
+    val record = FileFormat.recordMap(Seq(ts), valueCols.map(df.schema(_)), json = true,
+      key = _.replace('.', '_'))
     val action = id match {
       case Some(i) => concat(lit("{\"index\":{\"_index\":\""), index,
         lit("\",\"_type\":\"" + esType + "\",\"_id\":\""), i, lit("\"}}"))
@@ -159,13 +127,6 @@ object Sinks {
     concat(head, lit(" "), pairs(fields), lit(" "), ns)
   }
 
-  // one `"k":value` pair per column through FileFormat's msgpack2json
-  // renderer (single type-switch: nested arrays/maps/structs included)
-  private def jsonFieldPairs(df: DataFrame, valueCols: Seq[String]): Seq[Column] =
-    valueCols.map { c =>
-      concat(lit("\"" + c + "\":"), FileFormat.jsonVal(col(c), df.schema(c).dataType))
-    }
-
   /** One out_nats payload entry (`plugins/out_nats/nats.c:105-150`):
     * `[<%f time>, {"tag":"<tag>", …record}]` — the record map is packed
     * with the tag as its FIRST key, the whole thing serialized by
@@ -175,12 +136,10 @@ object Sinks {
     */
   def natsEntry(df: DataFrame, tagCol: String, secCol: String,
                 nsecCol: String, valueCols: Seq[String]): Column = {
-    val pairs = jsonFieldPairs(df, valueCols)
     val tagPair = concat(lit("\"tag\":\""),
       graft.functions.FlbJsonEscape(col(tagCol)), lit("\""))
-    val inner = (tagPair +: pairs).flatMap(p => Seq(p, lit(", "))).dropRight(1)
-    concat(Seq(lit("["), FileFormat.timeDouble(col(secCol), col(nsecCol)),
-      lit(", {")) ++ inner ++ Seq(lit("}]")): _*)
+    concat(lit("["), FileFormat.timeDouble(col(secCol), col(nsecCol)), lit(", "),
+      FileFormat.recordMap(Seq(tagPair), valueCols.map(df.schema(_)), json = true), lit("]"))
   }
 
   /** One out_http json-format record (`plugins/out_http/http.c:67-124`):
@@ -199,12 +158,8 @@ object Sinks {
         date_format(timestamp_seconds(col(secCol)), "yyyy-MM-dd'T'HH:mm:ss"),
         lit("."), lpad((col(nsecCol).cast("long") / 1000L).cast("long").cast("string"), 6, "0"),
         lit("Z\""))
-    val pairs = jsonFieldPairs(df, valueCols)
-    val head = concat(lit("{\"" + dateKey + "\":"), dateVal)
-    val inner =
-      if (pairs.isEmpty) Seq(head)
-      else Seq(head, lit(", ")) ++ pairs.flatMap(p => Seq(p, lit(", "))).dropRight(1)
-    concat(inner ++ Seq(lit("}")): _*)
+    FileFormat.recordMap(Seq(concat(lit("\"" + dateKey + "\":"), dateVal)),
+      valueCols.map(df.schema(_)), json = true)
   }
 
   /** One Splunk HEC event (`plugins/out_splunk/splunk.c:85-134`):
@@ -212,12 +167,8 @@ object Sinks {
     * back-to-back with NO separator (splunk.c:130, flb_sds_cat).
     */
   def splunkEvent(df: DataFrame, secCol: String, nsecCol: String,
-                  valueCols: Seq[String]): Column = {
-    val pairs = jsonFieldPairs(df, valueCols)
-    val inner =
-      if (pairs.isEmpty) Seq.empty[Column]
-      else pairs.flatMap(p => Seq(p, lit(", "))).dropRight(1)
-    concat(Seq(lit("{\"time\":"), FileFormat.timeDouble(col(secCol), col(nsecCol)),
-      lit(", \"event\":{")) ++ inner ++ Seq(lit("}}")): _*)
-  }
+                  valueCols: Seq[String]): Column =
+    concat(lit("{\"time\":"), FileFormat.timeDouble(col(secCol), col(nsecCol)),
+      lit(", \"event\":"), FileFormat.recordMap(Nil, valueCols.map(df.schema(_)), json = true),
+      lit("}"))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.sources.TokenTable
@@ -43,8 +44,9 @@ class AqeSkewSpec extends AnyFunSuite {
         .toDF("source").withColumn("label", lit("x"))
       val joined = fact.join(dim, Seq("source")).select(col("source"))
       assert(joined.collect().nonEmpty) // collect() executes THIS QueryExecution
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"), s"expected AQE skew split:\n${plan.take(2000)}")
+      val nodes = PlanNodes.of(joined)
+      assert(nodes.exists { case j: SortMergeJoinExec => j.isSkewJoin; case _ => false },
+        s"expected AQE skew split: ${nodes.map(_.nodeName)}")
     } finally {
       saved.foreach { case (k, v) =>
         v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }

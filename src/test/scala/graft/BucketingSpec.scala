@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.sources.TokenTable
@@ -27,9 +29,11 @@ class BucketingSpec extends AnyFunSuite {
 
       val joined = spark.table("graft_bucket_a")
         .join(spark.table("graft_bucket_b"), "source")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
+      PlanNodes.sections(joined).foreach { nodes =>
+        val names = nodes.map(_.nodeName)
+        assert(nodes.exists(_.isInstanceOf[SortMergeJoinExec]), names)
+        assert(!nodes.exists(_.isInstanceOf[Exchange]), s"bucketed join must not shuffle: $names")
+      }
       assert(joined.count() > 0)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)

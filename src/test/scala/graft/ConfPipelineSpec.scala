@@ -150,6 +150,50 @@ class ConfPipelineSpec extends AnyFunSuite {
     assert((frame(0) & 0xff) == 0x92) // fixarray 2: [tag, entries]
   }
 
+  test("conf forward output: EventTime keeps sub-second time, the record leaves ts out") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-conf-fwd-ns").toString
+    Files.writeString(Paths.get(dir, "app.log"), "2017-07-17T20:17:03.123456 hello\n")
+    val isoParser =
+      """[PARSER]
+        |    Name        iso
+        |    Format      regex
+        |    Regex       ^(?<time>[^ ]+) (?<msg>.*)$
+        |    Time_Key    time
+        |    Time_Format %Y-%m-%dT%H:%M:%S.%L
+        |""".stripMargin
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/*.log
+         |    Tag    fw.ns
+         |    Parser iso
+         |
+         |[OUTPUT]
+         |    Name  forward
+         |    Match *
+         |    Path  $dir/out_fw
+         |""".stripMargin
+    val results = ConfPipeline.run(ConfPipeline.load(spark, conf, isoParser), s"$dir/out").toMap
+    assert(results("forward_0") == 1L)
+    val frame = spark.read.parquet(s"$dir/out_fw").select("frame").as[Array[Byte]].collect().head
+    val (tag, entries) = graft.sinks.MsgpackDecode.unpackFrame(frame)
+    assert(tag == "fw.ns")
+    val e = entries.head
+    assert((e.sec, e.nsec) == ((1500322623L, 123456000L)))
+    assert(!e.record.contains("ts") && e.record.get("msg").contains("hello"), e.record)
+
+    // a record with no value column frames as an empty map
+    val bare = ConfPipeline.Loaded(
+      Seq(("fw.bare", java.sql.Timestamp.valueOf("2017-07-17 20:17:03"))).toDF("tag", "ts"),
+      Seq(ConfPipeline.OutputSpec("forward", "*", Map("path" -> s"$dir/out_bare"))))
+    assert(ConfPipeline.run(bare, s"$dir/out").toMap == Map("forward_0" -> 1L))
+    val bareFrame = spark.read.parquet(s"$dir/out_bare").select("frame").as[Array[Byte]]
+      .collect().head
+    assert(graft.sinks.MsgpackDecode.unpackFrame(bareFrame)._2.map(_.record) == Seq(Map.empty))
+  }
+
   test("conf lua filter: registered Scala fn — drop / replace record+timestamp (lua.c:330-393)") {
     import org.apache.spark.sql.functions._
     graft.operators.Scripted.LuaRegistry.register("anon.lua:cb_anon", (_, ts, rec) => {

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
@@ -99,7 +100,7 @@ class EnrichSpec extends AnyFunSuite {
     val facts = Seq((tag("web-1", "default"), 1)).toDF("tag", "v")
     val dim = Seq(("web-1_default", Map.empty[String, String], Map.empty[String, String]))
       .toDF("pod_key", "labels", "annotations")
-    val plan = Enrich.kubernetes(facts, "tag", dim).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    val nodes = PlanNodes.of(Enrich.kubernetes(facts, "tag", dim))
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), nodes.map(_.nodeName))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
@@ -183,6 +184,19 @@ class PlanAuditSpec extends AnyFunSuite {
         s"expected SMJ anti over the threshold:\n$big")
       assert(!big.contains("BroadcastHashJoin"), big)
     }
+  }
+
+  test("guard: at most 10 executedPlan.toString reads under src/test/scala") {
+    // a ratchet: plan assertions walk the tree through PlanNodes, and the
+    // string-matched reads that remain may only go down
+    val root = Paths.get("src/test/scala")
+    val sources = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(sources.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val read = """\.executedPlan\.toString""".r
+    val reads = sources.map(p => p.getFileName.toString -> read.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0)
+    assert(reads.map(_._2).sum <= 10, reads.sorted.mkString(", "))
   }
 
   private def withSQLConf(kvs: (String, String)*)(f: => Unit): Unit = {

@@ -1,14 +1,13 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.sinks.Sinks
 
-/** Sink-side operator semantics (out_file formats, kafka topic selection,
-  * ES serializer transforms, counter/flowcounter aggregates).
+/** Sink-side operator semantics (kafka topic selection, the ES index
+  * name, counter/flowcounter aggregates). The byte-exact line and payload
+  * formats are pinned in FileFormatSpec.
   */
 class SinksSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -38,36 +37,15 @@ class SinksSpec extends AnyFunSuite {
     assert(got(1).getLong(1) == 1 && got(1).getDouble(2) == 30.0)
   }
 
-  test("file sink writes json/csv/ltsv partitioned by sink (out_file formats)") {
-    Seq("json", "csv", "ltsv").foreach { fmt =>
-      val dir = Files.createTempDirectory(s"graft-sink-$fmt").toString
-      Sinks.writeFiles(df.drop("topic"), dir, fmt)
-      val sub = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("sink="))
-      assert(sub.toSet == Set("sink=app.a", "sink=db.b"), fmt)
-      if (fmt == "ltsv") {
-        val lines = spark.read.text(s"$dir/sink=app.a").as[String].collect()
-        assert(lines.forall(l => l.matches("id:\\d+\tn_tok:\\d+")), lines.mkString("|"))
-      }
-    }
-  }
-
   test("kafka topic selection: Topic_Key value else default (kafka.c:104-133)") {
     val got = df.select(col("id"), Sinks.kafkaTopic(col("topic"), "logs").as("t"))
       .as[(Long, String)].collect().toMap
     assert(got == Map(1L -> "x", 2L -> "y", 3L -> "logs"))
   }
 
-  test("ES transforms: dot→underscore key sanitize + logstash daily index (es.c:40-110,245-266)") {
-    val m = Seq(1).toDF("id")
-      .withColumn("rec", map(lit("a.b.c"), lit("1"), lit("plain"), lit("2")))
-    val keys = m.select(map_keys(Sinks.esSanitizeKeys(col("rec")))).collect()(0)
-      .getSeq[String](0).toSet
-    assert(keys == Set("a_b_c", "plain"))
+  test("ES logstash daily index (es.c:245-266)") {
     val idx = Seq(java.sql.Timestamp.valueOf("2017-07-17 20:17:03")).toDF("ts")
       .select(Sinks.esLogstashIndex(col("ts"), "logstash")).as[String].collect()(0)
     assert(idx == "logstash-2017.07.17")
-    val tk = Seq(java.sql.Timestamp.valueOf("2017-07-17 20:17:03.123")).toDF("ts")
-      .select(Sinks.esTimeKey(col("ts"))).as[String].collect()(0)
-    assert(tk == "2017-07-17T20:17:03.123") // ms precision (es.c:208-241)
   }
 }

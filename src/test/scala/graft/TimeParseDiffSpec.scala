@@ -46,6 +46,10 @@ import graft.parsers.Parsers
   *      (`.257835` gave 257834 µs).
   *   9. A sign before the year: null, as the kernel reads digits only;
   *      java.time read `-2017` as the year 2018 BCE.
+  *  10. `%y` of 69 to 99: the years 1969 to 1999, as glibc's `strptime`
+  *      (which the reference calls) reads them; java.time's `yy` reads
+  *      every two digits as 2000 to 2099. 00 to 68 are 2000 to 2068 in
+  *      both.
   */
 class TimeParseDiffSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -246,13 +250,13 @@ class TimeParseDiffSpec extends AnyFunSuite {
     (iso, "2017-07-17t20:17:03.5", Some(t0 + 500000L)),
     ("%y-%m-%d %T", "17-07-17 20:17:03", Some(t0)),
     ("%y-%m-%d %T", "7-07-17 20:17:03", None),
-    ("%y-%m-%d %T", "99-07-17 20:17:03", Some(4088002623000000L)), // 2099, not 1999
+    ("%y-%m-%d %T", "68-07-17 20:17:03", Some(3109781823000000L)),
     ("%Y %j %T", "2017 198 20:17:03", Some(t0)),
     ("%Y %j %T", "2016 366 00:00:00", Some(1483142400000000L)),
     ("%Y %j %T", "2017 366 00:00:00", None),
     ("%H%%%M", "20%17", Some(1483301820000000L)))
 
-  /** (format, input, kernel µs, chain µs): divergences 2 to 5, 8 and 9. */
+  /** (format, input, kernel µs, chain µs): divergences 2 to 5 and 8 to 10. */
   private val divergences: Seq[(String, String, Option[Long], Option[Long])] = Seq(
     (iso, "2017-007-17T20:17:03.5", None, Some(t0 + 500000L)),
     ("%b %d %H:%M:%S", "Feb 006 04:06:58", None, Some(1486354018000000L)),
@@ -261,7 +265,9 @@ class TimeParseDiffSpec extends AnyFunSuite {
     ("%z %Y-%m-%d", "+05:30 2017-07-17", Some(1500249600000000L - 19800000000L), None),
     ("%z %Y-%m-%d", "Z 2017-07-17", Some(1500249600000000L), None),
     (iso, "2017-07-17T20:17:03.257835", Some(t0 + 257835L), Some(t0 + 257834L)),
-    (clf, "17/Jul/-2017:20:17:03 +0000", None, Some(-125800486977000000L)))
+    (clf, "17/Jul/-2017:20:17:03 +0000", None, Some(-125800486977000000L)),
+    ("%y-%m-%d %T", "99-07-17 20:17:03", Some(932242623000000L), Some(4088002623000000L)),
+    ("%y-%m-%d %T", "69-07-17 20:17:03", Some(-14442177000000L), Some(3141317823000000L)))
 
   test("edge cases and the listed divergences, value by value") {
     (edges.map { case (f, s, us) => (f, s, us, us) } ++ divergences).foreach {

@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,10 +26,15 @@ class TopKSpec extends AnyFunSuite {
     assert(viaAgg == viaWindow)
     // map-side combine: the plan carries a PARTIAL aggregate before the
     // exchange (the whole point — k-bounded state, no full-group sort)
-    val plan = TopK.perGroup(o, "o_custkey", "o_totalprice", "o_orderkey", 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("partial"), plan)
-    assert(!plan.contains("Window"), plan)
+    PlanNodes.sections(TopK.perGroup(o, "o_custkey", "o_totalprice", "o_orderkey", 3))
+      .foreach { nodes =>
+        val names = nodes.map(_.nodeName)
+        assert(nodes.exists {
+          case a: BaseAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+          case _ => false
+        }, names)
+        assert(!nodes.exists(_.isInstanceOf[WindowExec]), names)
+      }
   }
 
   test("perGroupWithOrd rejects non-integral id columns with a clear error") {
