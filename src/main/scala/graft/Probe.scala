@@ -1,13 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.status.api.v1.StageData
 
 import graft.operators.{Dedup, Multiline, Similarity}
+import graft.run.JobCounts
 import graft.sources.{TailFixture, TokenTable}
 
 /** Dev probes behind one main: `sbt "runMain graft.Probe <mode> [args]"`.
@@ -19,8 +19,9 @@ import graft.sources.{TailFixture, TokenTable}
   *
   *   - `query <name> [explain]`: time one `SparkEntry.queries` entry 3×
   *     (query construction plus a noop sink write, as Bench times it)
-  *     with a per-run job/stage/task census; `explain` first prints the
-  *     formatted physical plan. `QDEBUG_JOBS=1` logs every job and stage.
+  *     with a per-run job/stage/task census ([[graft.run.JobCounts]]);
+  *     `explain` first prints the formatted physical plan. `QDEBUG_JOBS=1`
+  *     logs every job and stage.
   *   - `seq [n] [k]`: cross-query interference — replay the first `n`
   *     queries alphabetically (warm-up + timed, Bench phase-1 shape), then
   *     re-time the first `k` at the end. A re-run slower than its first
@@ -72,34 +73,29 @@ object Probe {
   private def query(spark: SparkSession, dir: String, name: String, explain: Boolean): Unit = {
     // iterative operators' wall time is usually job-count-bound, so the
     // job census is the first dial
-    val jobs, stages, tasks = new AtomicInteger
-    val logJobs = sys.env.contains("QDEBUG_JOBS")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (logJobs)
-          System.err.println(s"[qdebug-job] ${j.jobId}: " +
-            j.stageInfos.map(s => s"${s.name.takeWhile(_ != '\n').take(60)}(${s.numTasks}t)").mkString(" | "))
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-        if (logJobs) {
-          val i = s.stageInfo
-          val ms = for {a <- i.completionTime; b <- i.submissionTime} yield a - b
-          System.err.println(f"[qdebug-stage] ${i.stageId}%3d ${ms.getOrElse(-1L)}%6d ms " +
-            s"${i.numTasks}t ${i.name.takeWhile(_ != '\n').take(70)}")
-        }
-      }
-    })
     val fn = SparkEntry.queries(name)
     if (explain) fn(spark, dir).explain("formatted")
     (1 to 3).foreach { i =>
-      jobs.set(0); stages.set(0); tasks.set(0)
-      val sec = noopWrite(fn(spark, dir))
-      Thread.sleep(100) // let listener events drain
+      val (sec, c) = JobCounts.of(spark, s"graft-probe-$name-$i")(noopWrite(fn(spark, dir)))
+      if (sys.env.contains("QDEBUG_JOBS")) logStore(c)
       System.err.println(f"[qdebug] $name run $i: $sec%.3f s " +
-        s"(jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get})")
+        s"(jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks})")
+    }
+  }
+
+  /** Each job with its stages' task counts, then each stage attempt that
+    * ran with its wall time, from the status store. */
+  private def logStore(c: JobCounts): Unit = {
+    def label(s: StageData, n: Int) = s.name.takeWhile(_ != '\n').take(n)
+    val byId = c.stageData.groupBy(_.stageId)
+    c.jobData.foreach { j =>
+      System.err.println(s"[qdebug-job] ${j.jobId}: " + j.stageIds.sorted.map(byId(_).head)
+        .map(s => s"${label(s, 60)}(${s.numTasks}t)").mkString(" | "))
+    }
+    c.ran.foreach { s =>
+      val ms = for {a <- s.completionTime; b <- s.submissionTime} yield a.getTime - b.getTime
+      System.err.println(f"[qdebug-stage] ${s.stageId}%3d ${ms.getOrElse(-1L)}%6d ms " +
+        s"${s.numTasks}t ${label(s, 70)}")
     }
   }
 

@@ -3,6 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.operators.Grep
 import graft.route.SinkSpec
 import graft.run._
@@ -18,13 +21,13 @@ import graft.sources.TokenTable
   * `workDir/in/snapN/` parquet dirs are the input snapshots (registered in
   * the ledger on first run); `--gen` synthesizes them first (BASELINE
   * shape). Re-running resumes: committed (sink, snapshot) pairs are
-  * skipped. Prints one status line per commit and a metrics summary.
+  * skipped. Prints one status line per commit and a metrics summary that
+  * counts the jobs of `Pipeline.run` alone (not the `--gen` writes).
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val workDir = args(0)
     val spark = Sessions.create("graft-pipeline")
-    val metrics = GraftMetricsListener.install(spark)
     val ledger = new SnapshotLedger(workDir).init()
 
     if (args.length > 1 && args(1) == "--gen") {
@@ -36,8 +39,7 @@ object RunPipeline {
         // [0, rows) lands in exactly one snapshot
         val hi = if (i == nSnaps - 1) rows else (i + 1) * per
         TokenTable.synthetic(spark, rows, 32)
-          .filter(org.apache.spark.sql.functions.col("seq") >= i * per)
-          .filter(org.apache.spark.sql.functions.col("seq") < hi)
+          .filter(col("seq") >= i * per && col("seq") < hi)
           .write.mode("overwrite").parquet(s"$workDir/in/snap$i")
         val files = Files.list(Paths.get(s"$workDir/in/snap$i")).iterator.asScala
           .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
@@ -56,16 +58,12 @@ object RunPipeline {
       // console (one-shot drain; checkpointLocation makes re-runs resume)
       import graft.streaming.StreamPipeline
       val stream = StreamPipeline.tokenStream(spark, s"$workDir/in/*")
-      val agg = StreamPipeline.routed(stream, spec)
-        .groupBy(org.apache.spark.sql.functions.col("sink"))
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("cnt"),
-          org.apache.spark.sql.functions.sum(
-            org.apache.spark.sql.functions.col("n_tok")).as("sum_n_tok"))
+      val agg = Pipeline.transform(stream, spec)
+        .groupBy(col("sink")).agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("sum_n_tok"))
       val q = agg.writeStream
         .format("console").outputMode("complete")
         .option("checkpointLocation", s"$workDir/_stream_checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       println("[pipeline] streaming drain complete")
@@ -77,14 +75,15 @@ object RunPipeline {
     println(s"[pipeline] pending snapshots: ${pendingBefore.mkString(",")} " +
       s"(committed work is skipped: ledger resume)")
     val t0 = System.nanoTime()
-    val commits = Pipeline.run(spark, ledger, spec, s"$workDir/out")
+    val (commits, counts) =
+      JobCounts.of(spark, "graft-pipeline")(Pipeline.run(spark, ledger, spec, s"$workDir/out"))
     val sec = (System.nanoTime() - t0) / 1e9
     commits.foreach { c =>
       println(f"[pipeline] commit sink=${c.sink} snap=${c.snapshotId} rows=${c.rows} " +
         f"sum_n_tok=${c.sumNTok} lineage_files=${c.lineage.map(_.inputFile).distinct.size}")
     }
     println(f"[pipeline] done: ${commits.size} commits in $sec%.1f s")
-    println(s"[pipeline] metrics: ${metrics.snapshot.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")}")
+    println(s"[pipeline] metrics: ${counts.metrics.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")}")
     spark.stop()
   }
 }

@@ -5,13 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.run.PipelineSpec
-import graft.run.Pipeline
-
 /** Structured Streaming wrapper (SURVEY §1.3: the reference is an
   * incremental streamer; every operator here is a pure function of
-  * (tag, ts, record), so the SAME column-level transform chain runs under
-  * `readStream` unchanged — batch-first, streaming as a wrapper).
+  * (tag, ts, record), so the SAME column-level transform chain,
+  * `Pipeline.transform`, runs under `readStream` unchanged — batch-first,
+  * streaming as a wrapper).
   *
   * `Trigger.AvailableNow` + the file source's own checkpoint reproduces
   * the reference's chunk-flush cadence (`flb_engine.c:434-442`); the
@@ -30,12 +28,6 @@ object StreamPipeline {
 
   def tokenStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(tokenSchema).parquet(dir)
-
-  /** The batch pipeline transform applied to a stream — identical code
-    * path ([[Pipeline.transform]] is pure column expressions).
-    */
-  def routed(stream: DataFrame, spec: PipelineSpec): DataFrame =
-    Pipeline.transform(stream, spec)
 
   /** `out_flowcounter` as a streaming windowed aggregate: tumbling window
     * counts + sums with a watermark (event_based mode,

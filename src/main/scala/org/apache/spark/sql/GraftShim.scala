@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.status.api.v1.{JobData, StageData}
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters that Spark 4
   * keeps behind `org.apache.spark.sql.classic` (columnNodeSupport.scala).
@@ -29,4 +30,15 @@ object GraftShim {
         r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case _ => ()
     }
+
+  /** The jobs the `private[spark]` status store holds, newest first, once
+    * the listener bus has delivered every event posted so far. */
+  def jobs(spark: SparkSession): Seq[JobData] = {
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+    spark.sparkContext.statusStore.jobsList(null)
+  }
+
+  /** The attempts the status store holds of one stage (none once evicted). */
+  def stageAttempts(spark: SparkSession, stageId: Int): Seq[StageData] =
+    spark.sparkContext.statusStore.stageData(stageId)
 }

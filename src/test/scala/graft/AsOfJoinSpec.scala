@@ -1,6 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.RangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoin
@@ -65,9 +70,12 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select("event_id", "v").as[(Long, Option[Long])].collect().toMap
     assert(scalable.size == 2000 && scalable == base)
     // windows partition by (key, bucket) — the hot key's sort is split
-    val plan = AsOfJoin.lastBeforeScalable(events, "k", "ts", dims, "k", "ts_d",
-      "v" :: Nil, bucket).queryExecution.executedPlan.toString
-    assert(plan.contains("_b"), plan)
+    val q = AsOfJoin.lastBeforeScalable(events, "k", "ts", dims, "k", "ts_d", "v" :: Nil, bucket)
+    PlanNodes.sections(q).foreach { nodes =>
+      val specs = nodes.collect { case w: WindowExec => w.partitionSpec.flatMap(_.references.map(_.name)) }
+      assert(specs.exists(spec => spec.contains("k") && spec.contains("_b")),
+        s"no window partitions by (k, _b): $specs\n${q.queryExecution.executedPlan}")
+    }
   }
 
   test("lastBeforeBroadcast ≡ lastBefore; events stay UNSHUFFLED (no hash Exchange)") {
@@ -93,12 +101,20 @@ class AsOfJoinSpec extends AnyFunSuite {
     // dropDuplicates; the payload attach is a broadcast join)
     val out = AsOfJoin.lastBeforeBroadcast(events, "k", "ts", dims, "k", "ts_d", Seq("v"))
     out.collect()
-    val lines = out.queryExecution.executedPlan.toString.linesIterator.toSeq
-    val lookup = lines.indexWhere(_.contains("asoflookup"))
-    val scan = lines.indexWhere(_.contains("Range (0, 2000"), lookup)
-    assert(lookup >= 0 && scan > lookup, lines.mkString("\n"))
-    assert(!lines.slice(lookup, scan).exists(_.contains("Exchange")), lines.mkString("\n"))
-    assert(lines.exists(_.contains("BroadcastHashJoin")), lines.mkString("\n"))
+    val plan = out.queryExecution.executedPlan
+    // the final plan's nodes in the order the plan prints them
+    val nodes = PlanNodes.of(out)
+    val lookup = nodes.indexWhere(_.expressions.exists(_.exists(_.isInstanceOf[AsOfJoin.AsOfLookup])))
+    val scan = nodes.indexWhere({
+      case r: RangeExec => r.start == 0 && r.end == 2000
+      case _ => false
+    }, lookup)
+    assert(lookup >= 0 && scan > lookup, plan)
+    assert(!nodes.slice(lookup, scan).exists {
+      case _: Exchange | _: ReusedExchangeExec => true
+      case _ => false
+    }, plan)
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)
   }
 
   test("lastBeforeBroadcast on INTEGRAL µs-count ts columns ≡ lastBefore (no seconds-cast overflow)") {
@@ -125,9 +141,14 @@ class AsOfJoinSpec extends AnyFunSuite {
       (col("id") % 7).as("k"), timestamp_micros(col("id") * 17000000L).as("ts_d"),
       col("id").as("v"))
     val out = AsOfJoin.lastBefore(events, "k", "ts", dims, "k", "ts_d", "v")
-    val plan = out.queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size <= 2, plan)
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"), plan)
+    val plan = out.queryExecution.executedPlan
+    PlanNodes.sections(out).foreach { nodes =>
+      assert(PlanNodes.hashShuffleKeys(nodes).size <= 2, plan)
+      assert(!nodes.exists {
+        case _: CartesianProductExec | _: BroadcastNestedLoopJoinExec => true
+        case _ => false
+      }, plan)
+    }
     assert(out.count() == 1000)
   }
 

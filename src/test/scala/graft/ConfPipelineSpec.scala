@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.parsers.ParserConfLoader
-import graft.run.ConfPipeline
+import graft.run.{ConfPipeline, JobCounts}
 
 /** The fluent-bit-user switch path: bring a classic `.conf` + parsers.conf
   * and run the same pipeline (SURVEY §7.3 minimum slice as config text).
@@ -477,7 +477,6 @@ class ConfPipelineSpec extends AnyFunSuite {
   }
 
   test("run counts each output on its own write: one Spark job per output") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = Files.createTempDirectory("graft-conf-jobs").toString
     mkLog(dir, "app.log", Seq(200, 500, 503))
     val conf =
@@ -504,27 +503,13 @@ class ConfPipelineSpec extends AnyFunSuite {
          |    Match  *
          |""".stripMargin
     val loaded = ConfPipeline.load(spark, conf, parsersConf)
-    val sc = spark.sparkContext
-    val group = "conf-jobs-spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+    val (results, counts) = JobCounts.of(spark, "conf-jobs-spec") {
+      ConfPipeline.run(loaded, s"$dir/out").toMap
     }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ConfPipeline.run")
-    val results =
-      try ConfPipeline.run(loaded, s"$dir/out").toMap
-      finally {
-        sc.clearJobGroup()
-        org.apache.spark.TestBus.drain(sc)
-        sc.removeSparkListener(listener)
-      }
     assert(results == Map("file_0" -> 3L, "file_1" -> 3L, "counter_2" -> 3L))
     // no recount after a write and no separate cache fill: the first
     // write fills the cache, and each output's count comes out of its write
-    assert(jobs.get == 3, s"${jobs.get} Spark jobs for 3 outputs")
+    assert(counts.jobs == 3, s"${counts.jobs} Spark jobs for 3 outputs")
   }
 
   test("regex census: the conf input path matches the parser's pattern once per line") {

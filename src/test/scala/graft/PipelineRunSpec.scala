@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Grep
 import graft.route.SinkSpec
-import graft.run.{GraftMetricsListener, Pipeline, PipelineSpec, Snapshot, SnapshotLedger}
+import graft.run.{JobCounts, Pipeline, PipelineSpec, Snapshot, SnapshotLedger}
 import graft.sources.TokenTable
 
 /** End-to-end pipeline + snapshot ledger semantics: resume-after-kill
@@ -62,24 +62,12 @@ class PipelineRunSpec extends AnyFunSuite {
     val ledger = makeInput(root)
     val snap = ledger.pending(spec.sinks.map(_.name)).head
     val expected = spark.read.parquet(snap.files: _*).count()
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Thread.sleep(300) // drain events from the count() above
-      recordsRead.set(0)
+    val (_, counts) = JobCounts.of(spark, "pipe-scan-once") {
       Pipeline.runSnapshot(spark, ledger, snap, spec, s"$root/out")
-      // listener events are async — wait until the total stabilizes
-      var last = -1L; var tries = 0
-      while (recordsRead.get != last && tries < 50) { last = recordsRead.get; Thread.sleep(100); tries += 1 }
-      // the two-pass formulation read 2×expected; single-pass reads exactly 1×
-      assert(recordsRead.get == expected,
-        s"expected one scan of $expected input rows, read ${recordsRead.get}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // the two-pass formulation read 2×expected; single-pass reads exactly 1×
+    assert(counts.recordsIn == expected,
+      s"expected one scan of $expected input rows, read ${counts.recordsIn}")
     deleteRec(Paths.get(root))
   }
 
@@ -109,21 +97,20 @@ class PipelineRunSpec extends AnyFunSuite {
     deleteRec(Paths.get(root))
   }
 
-  test("metrics listener mirrors reference counters (records/bytes in, out ok)") {
+  test("job counts mirror reference counters (records/bytes in, out ok)") {
     val root = Files.createTempDirectory("graft-pipe3").toString
     val ledger = makeInput(root)
-    val metrics = GraftMetricsListener.install(spark)
-    Pipeline.run(spark, ledger, spec, s"$root/out")
-    // listener events are async — poll briefly until counters settle
-    var tries = 0
-    while (metrics.snapshot("out_ok_records") == 0 && tries < 50) {
-      Thread.sleep(100); tries += 1
+    val (commits, counts) = JobCounts.of(spark, "pipe-counters") {
+      Pipeline.run(spark, ledger, spec, s"$root/out")
     }
-    val m = metrics.snapshot
-    assert(m("records_in") > 0)
+    val m = counts.metrics
+    assert(m("records_in") == 1000) // the three snapshots, each scanned once
     assert(m("bytes_in") > 0)
-    assert(m("out_ok_records") > 0)
+    // the write's records are the routed rows the commits count, nothing more
+    assert(m("out_ok_records") > 0 && m("out_ok_records") == commits.map(_.rows).sum)
+    assert(m("out_ok_bytes") > 0)
     assert(m("out_errors") == 0)
+    assert(m("retries") == 0 && m("retry_failed") == 0)
     deleteRec(Paths.get(root))
   }
 }

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, JsonToStructs}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
   BroadcastQueryStageExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
 import graft.functions.{RegexParse, RegexParseField}
 
@@ -90,4 +91,12 @@ object PlanNodes extends AdaptiveSparkPlanHelper {
     val n = parses(nodes)
     n("RegexParse") + n("RegexParseField")
   }
+
+  /** The columns each hash-partitioned shuffle among `nodes` keys on, in
+    * key order: `hashpartitioning(a, b)` gives `Seq("a", "b")`.
+    */
+  def hashShuffleKeys(nodes: Seq[SparkPlan]): Seq[Seq[String]] =
+    nodes.collect { case e: ShuffleExchangeLike => e.outputPartitioning }.collect {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+    }
 }

@@ -1,6 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -8,6 +13,14 @@ import graft.operators.Similarity
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** Every node of every plan section of `df` that matches `p`. */
+  private def nodes(df: DataFrame)(p: PartialFunction[SparkPlan, Boolean]): Seq[SparkPlan] =
+    PlanNodes.sections(df).flatten.filter(p.applyOrElse(_, (_: SparkPlan) => false))
+
+  private val exchange: PartialFunction[SparkPlan, Boolean] = {
+    case _: Exchange | _: ReusedExchangeExec => true
+  }
 
   test("cosine: identical vectors → 1.0, orthogonal → 0.0, zero vector → null") {
     val df = Seq(
@@ -163,16 +176,15 @@ class SimilaritySpec extends AnyFunSuite {
     val out = Similarity.ivfAssign(
       e.select(col("vec_id"), col("embedding")), "vec_id", "embedding", cents)
     out.collect() // finalize the AQE plan before inspecting it
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    assert(!plan.toLowerCase.contains("join"), plan)
-    assert(!plan.contains("Window"), plan)
+    val plan = out.queryExecution.executedPlan
+    assert(nodes(out)(exchange).isEmpty, plan)
+    assert(nodes(out) { case _: BaseJoinExec => true }.isEmpty, plan)
+    assert(nodes(out) { case _: WindowExecBase | _: WindowGroupLimitExec => true }.isEmpty, plan)
     // nprobe variant: still exchange-free (explode is narrow)
     val outN = Similarity.ivfAssignN(
       e.select(col("vec_id"), col("embedding")), "vec_id", "embedding", cents, 3)
     outN.collect()
-    val planN = outN.queryExecution.executedPlan.toString
-    assert(!planN.contains("Exchange"), planN)
+    assert(nodes(outN)(exchange).isEmpty, outN.queryExecution.executedPlan)
   }
 
   test("fused ivfAssignN matches the broadcast-join + window formulation row-for-row") {
@@ -229,8 +241,8 @@ class SimilaritySpec extends AnyFunSuite {
     val cands = vecs.toDF("cid", "cvec")
     val qs = vecs.take(3).toDF("qid", "qvec")
     val out = Similarity.lshTopK(qs, "qid", "qvec", cands, "cid", "cvec", 3, planes = 4)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    assert(nodes(out) { case _: BroadcastHashJoinExec => true }.nonEmpty,
+      out.queryExecution.executedPlan)
     // every returned neighbor shares the query's bucket by construction
     assert(out.count() > 0)
   }
@@ -250,7 +262,6 @@ class SimilaritySpec extends AnyFunSuite {
       assert(fromSigns == bucket, s"vec ${r.getLong(0)}")
     }
     // projection is a narrow per-row pass: no Exchange in the plan
-    val plan = both.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"))
+    assert(nodes(both)(exchange).isEmpty, both.queryExecution.executedPlan)
   }
 }

@@ -29,7 +29,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, Long, Long)].collect().toSet
 
     // streaming: same transform chain under readStream
-    val routed = StreamPipeline.routed(StreamPipeline.tokenStream(spark, dir), spec)
+    val routed = graft.run.Pipeline.transform(StreamPipeline.tokenStream(spark, dir), spec)
       .groupBy("sink").agg(count(lit(1)).as("cnt"), sum("n_tok").as("s"))
     StreamPipeline.drainToMemory(routed, "routed_agg", outputMode = "complete")
     val streamed = spark.sql("SELECT * FROM routed_agg")
@@ -67,7 +67,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("window.start"), col("sink"), col("cnt"), col("s"))
       .as[(java.sql.Timestamp, String, Long, Long)].collect().toSet
 
-    val routed = StreamPipeline.routed(StreamPipeline.tokenStream(spark, dir), nsSpec)
+    val routed = graft.run.Pipeline.transform(StreamPipeline.tokenStream(spark, dir), nsSpec)
     val fc = StreamPipeline.flowCounter(routed, "event_ts", "10 minutes", "1 hour", "n_tok")
     StreamPipeline.drainToMemory(fc, "ns_fc", outputMode = "complete")
     val streamed = spark.sql("SELECT window.start, sink, cnt, sum_val FROM ns_fc")
