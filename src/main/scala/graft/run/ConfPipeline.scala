@@ -34,30 +34,36 @@ import graft.sources.{Samplers, TailSource}
   *     Time_as_Integer), `null`, `stdout`
   *
   * Filters run on a fixed-schema line frame (`line`, `file`, `tag` +
-  * parsed columns); a row-level filter whose Match doesn't cover a row
-  * leaves that row untouched (split-union / keep-gating,
-  * `src/flb_filter.c:78-106`). DEVIATION: schema-changing filters
-  * (record_modifier, nest) apply to ALL rows regardless of Match — a
-  * fixed-schema frame cannot hold per-row column sets; route such
-  * configs through the map-record operators (`Modify`,
+  * parsed columns); a filter whose Match doesn't cover a row leaves that
+  * row untouched (`src/flb_filter.c:78-106`): `parser`, `throttle` and
+  * `lua` run on the matching rows only and union the rest back, `grep`
+  * keeps every row of another tag. DEVIATION: the column-rewriting
+  * filters `record_modifier`, `nest` and `modify` apply to ALL rows
+  * regardless of Match — a fixed-schema frame cannot hold per-row column
+  * sets; route such configs through the map-record operators (`Modify`,
   * `ParserFilter.onMap`) when per-tag schema divergence matters.
   */
 object ConfPipeline {
 
-  /** A flattened record key colliding with a frame column name is
-    * prefix-uniquified (re-prefixing until unused): a record carrying
-    * BOTH the reserved name and its prefixed form must not produce
-    * duplicate output columns — the reference keeps record keys in
-    * their own msgpack namespace; flattening to columns conflates the
-    * two. Shared by every face that flattens records (forward, mqtt).
+  /** The flatten step of the record-carrying inputs (forward, mqtt):
+    * `raw` holds the frame columns plus the record map `_rec`, and each key
+    * of the batch's record-key union becomes one column, in sorted order.
+    * The union is taken on the driver: the batch already passed through
+    * the driver's accept loop, so the key scan adds no pass. A key
+    * colliding with a frame column name is prefix-uniquified (re-prefixing
+    * until unused): a record carrying BOTH the reserved name and its
+    * prefixed form must not produce duplicate output columns — the
+    * reference keeps record keys in their own msgpack namespace;
+    * flattening to columns conflates the two.
     */
-  private def uniquifyKey(k: String, keys: Seq[String], reserved: Set[String]): String =
-    if (!reserved(k)) k
-    else {
-      var cand = "_" + k
-      while (keys.contains(cand)) cand = "_" + cand
-      cand
-    }
+  private def flattenRecords(raw: DataFrame, records: Seq[Map[String, String]]): DataFrame = {
+    val keys = records.flatMap(_.keys).distinct.sorted
+    val frame = raw.columns.filter(_ != "_rec").toSeq
+    def unique(k: String): String =
+      if (!frame.contains(k)) k
+      else Iterator.iterate("_" + k)("_" + _).find(!keys.contains(_)).get
+    raw.select(frame.map(col) ++ keys.map(k => col("_rec").getItem(k).as(unique(k))): _*)
+  }
 
   /** Size values with optional binary-ish suffix, exactly
     * `flb_utils_size_to_bytes` (`src/flb_utils.c:312-376`): suffix is the
@@ -247,9 +253,7 @@ object ConfPipeline {
         case Some("forward") =>
           // in_forward (fw_prot.c): drain msgpack frames, decode leniently,
           // and surface each entry as columns — tag, ts (from the fixext8
-          // sec+nsec), and one column per record key (the union of keys in
-          // the drained batch; the batch already passed through the
-          // driver's accept loop, so the driver-side key scan adds nothing)
+          // sec+nsec), and one column per record key ([[flattenRecords]])
           val port = s.get("Port").map(_.toInt).getOrElse(24224)
           val l = graft.sources.NetworkSources.listen(port)
           val payloads = try l.drainUntilQuiet(quietMs, timeoutMs) finally l.close()
@@ -265,14 +269,10 @@ object ConfPipeline {
             else sec * 1000000L + nsec / 1000L
           val entries = decoded.flatMap(_._1)
             .flatMap { case (t, es) => es.map(e => (t, micros(e.sec, e.nsec), e.record)) }
-          val keys = entries.flatMap(_._3.keys).distinct.sorted
           import spark.implicits._
-          val raw = entries.toDF("tag", "_fus", "_rec")
-          raw.select(
-            col("tag") +:
-              timestamp_micros(col("_fus")).as("ts") +:
-              keys.map(k =>
-                col("_rec").getItem(k).as(uniquifyKey(k, keys, Set("tag", "ts")))): _*)
+          flattenRecords(entries.toDF("tag", "_fus", "_rec")
+            .select(col("tag"), timestamp_micros(col("_fus")).as("ts"), col("_rec")),
+            entries.map(_._3))
         case Some(n @ ("mem" | "cpu" | "disk" | "netif" | "proc" | "health")) =>
           // metric sampler faces (driver-side /proc readers / TCP probe,
           // graft.sources.Samplers): interval semantics follow the
@@ -319,8 +319,8 @@ object ConfPipeline {
           // parses as a JSON map into one record with the topic prepended
           // under 'topic' (mqtt_data_append, mqtt_prot.c:112-174); a
           // non-JSON payload is dropped with a warning (the flb_pack_json
-          // failure path). Record keys are unioned driver-side like the
-          // forward face — the batch already passed the accept loop.
+          // failure path). Record keys flatten like the forward face's
+          // ([[flattenRecords]]).
           val port = s.get("Port").map(_.toInt).getOrElse(1883)
           val tag = s.get("Tag").getOrElse("mqtt.0")
           val b = graft.sources.Mqtt.broker(port)
@@ -333,13 +333,9 @@ object ConfPipeline {
                 None
             }
           }
-          val keys = parsed.flatMap(_._2.keys).distinct.sorted
           import spark.implicits._
-          val raw = parsed.toDF("topic", "_rec").withColumn("tag", lit(tag))
-          raw.select(
-            col("topic") +: col("tag") +:
-              keys.map(k =>
-                col("_rec").getItem(k).as(uniquifyKey(k, keys, Set("topic", "tag")))): _*)
+          flattenRecords(parsed.toDF("topic", "_rec").withColumn("tag", lit(tag)),
+            parsed.map(_._2))
         case Some("kmsg") =>
           // in_kmsg (in_kmsg.c:108-210): kernel-log lines → {priority,
           // sequence, sec, usec, msg} with boot-relative event time (boot
@@ -387,12 +383,14 @@ object ConfPipeline {
     // ---- FILTER chain, in order, each gated by Match
     val filtered = sections.filter(_.name == "FILTER").foldLeft(input) { (df, s) =>
       val matchGlob = s.get("Match").getOrElse("*")
-      def gated(transformed: DataFrame): DataFrame =
-        if (matchGlob == "*") transformed
+      // The Match gate: the filter sees only the rows whose tag matches,
+      // the rest pass through untouched — the reference tests the tag
+      // before it invokes the filter (flb_filter.c:78-106)
+      def gated(f: DataFrame => DataFrame): DataFrame =
+        if (matchGlob == "*") f(df)
         else {
-          // split-union: matching rows transformed, the rest pass through
           val m = Glob.tagMatches(col("tag"), matchGlob)
-          transformed.filter(m).unionByName(df.filter(!m), allowMissingColumns = true)
+          f(df.filter(m)).unionByName(df.filter(!m), allowMissingColumns = true)
         }
       s.get("Name").map(_.toLowerCase) match {
         case Some("grep") =>
@@ -405,7 +403,8 @@ object ConfPipeline {
             case (k, v) if k.equalsIgnoreCase("Exclude") =>
               val Array(f, p) = v.split("\\s+", 2); Grep.Exclude(f, p)
           }
-          // grep drops rows: non-matching tags must be kept regardless
+          // grep only drops rows, so one filter gates it: non-matching
+          // tags are kept regardless (a split-union would scan df twice)
           val keep = Grep.keepPredicate(rules,
             f => if (df.columns.contains(f)) col(f) else lit(null).cast("string"))
           df.filter(!Glob.tagMatches(col("tag"), matchGlob) || keep)
@@ -423,7 +422,7 @@ object ConfPipeline {
           val key = s.get("Key_Name").getOrElse("line")
           val p = s.get("Parser").flatMap(parsers.get).getOrElse(
             throw new IllegalArgumentException("parser filter: unknown Parser"))
-          gated(ParserFilter.flatten(key, p)(df))
+          gated(ParserFilter.flatten(key, p))
         case Some("throttle") =>
           val rate = s.get("Rate").map(_.toDouble).getOrElse(1.0)
           val interval = s.get("Interval").map(_.stripSuffix("s").toInt).getOrElse(1)
@@ -434,7 +433,7 @@ object ConfPipeline {
             val tieBreak = Seq("line", "sequence", "msg")
               .find(df.columns.contains)
               .getOrElse(df.columns.filter(_ != "ts").head)
-            Throttle.apply("ts", tieBreak, interval, rate)(df)
+            gated(Throttle.apply("ts", tieBreak, interval, rate))
           } else df
         case Some("nest") =>
           s.get("Operation").map(_.toLowerCase) match {
@@ -447,19 +446,13 @@ object ConfPipeline {
           }
         case Some("lua") =>
           // lua.c:330-393 semantics over a registered Scala function; the
-          // callback runs ONLY on matching rows (it can drop), the rest
-          // pass through untouched
+          // callback runs ONLY on matching rows (it can drop)
           val script = s.get("script").getOrElse(
             throw new IllegalArgumentException("lua filter needs script"))
           val callName = s.get("call").getOrElse(
             throw new IllegalArgumentException("lua filter needs call"))
           val fn = Scripted.LuaRegistry.resolve(script, callName)
-          if (matchGlob == "*") Scripted.applyLua(df, fn)
-          else {
-            val m = Glob.tagMatches(col("tag"), matchGlob)
-            Scripted.applyLua(df.filter(m), fn)
-              .unionByName(df.filter(!m), allowMissingColumns = true)
-          }
+          gated(Scripted.applyLua(_, fn))
         case Some("modify") =>
           // fixed-schema face of filter_modify: structural rules act on
           // COLUMNS; only schema-decidable conditions (Key_exists /

@@ -66,7 +66,8 @@ object Pipeline {
     Router.fanOut(enriched, spec.tagCol, spec.sinks)
   }
 
-  /** Process one snapshot: read its files, transform, write per-sink
+  /** Process one snapshot: read it through the table seam
+    * ([[ParquetSnapshotTable]]), transform, write per-sink
     * output under `outDir/data/snap=<id>/sink=<name>/`, and commit each
     * sink with row counts + per-partition lineage.
     *
@@ -78,7 +79,7 @@ object Pipeline {
     */
   def runSnapshot(spark: SparkSession, ledger: SnapshotLedger, snap: Snapshot,
                   spec: PipelineSpec, outDir: String): Seq[SinkCommit] = {
-    val in = spark.read.parquet(snap.files: _*)
+    val in = new ParquetSnapshotTable(ledger).read(spark, snap)
       .withColumn("_input_file", input_file_name())
     val routed = transform(in, spec)
       .withColumn("_pid", spark_partition_id())

@@ -3,9 +3,6 @@ package graft.sources
 import java.net.{ServerSocket, Socket}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** One decoded PUBLISH per row — the distributed-decode face used by the
   * `fb_mqtt_roundtrip` oracle query (top-level: Dataset encoders require
   * it). `clean` = exactly one packet, fully consumed, no codec error.
@@ -359,18 +356,4 @@ object Mqtt {
         })
       }
     } catch { case _: Exception => None }
-
-  /** Drained PUBLISH batch → one raw (topic, line, file, tag) row per
-    * message; the payload stays a raw line for the standard parser chain
-    * (the conf face applies the json parser like `mqtt_data_append`'s
-    * flb_pack_json, dropping non-JSON with a warning).
-    */
-  def mqttRows(spark: SparkSession, messages: Seq[(String, Array[Byte])],
-               tag: String = "mqtt.0"): DataFrame = {
-    import spark.implicits._
-    messages.zipWithIndex
-      .map { case ((t, p), i) => (t, new String(p, "UTF-8"), s"msg-$i") }
-      .toDF("topic", "line", "file")
-      .withColumn("tag", lit(tag))
-  }
 }

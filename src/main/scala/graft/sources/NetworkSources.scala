@@ -4,10 +4,8 @@ import java.io.ByteArrayOutputStream
 import java.net.{ServerSocket, Socket}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.sinks.{Forward, MsgpackDecode}
 
 /** Live TCP ingest faces for the socket inputs the reference ships:
   * `in_forward` (`plugins/in_forward/fw_prot.c:33-46` — msgpack frames),
@@ -108,7 +106,8 @@ object NetworkSources {
       * passed with no traffic (or `timeoutMillis` elapses), then snapshot
       * every connection's bytes so far — including still-open persistent
       * connections (a quiet window mid-frame would snapshot a partial
-      * frame; the lenient decode in [[forwardRows]] skips the cut tail).
+      * frame; the conf `forward` input decodes with
+      * `MsgpackDecode.unpackFramesLenient`, which skips the cut tail).
       */
     def drainUntilQuiet(quietMillis: Long = 300,
                         timeoutMillis: Long = 30000): Seq[Array[Byte]] = {
@@ -208,27 +207,6 @@ object NetworkSources {
       out.toSeq
     }
     def close(): Unit = sock.close()
-  }
-
-  /** `in_forward` ingest: connection payloads (each a stream of msgpack
-    * frames) → one row per entry, the same (tag, sec, nsec, record) frame
-    * shape [[Forward.parseFrames]] yields — decode distributes across the
-    * cluster, only the raw bytes pass through the driver.
-    */
-  def forwardRows(spark: SparkSession,
-                  payloads: Seq[Array[Byte]]): Dataset[Forward.ForwardRow] = {
-    import spark.implicits._
-    payloads.toDS().flatMap { bytes =>
-      // LENIENT decode: wire bytes are untrusted (a garbage connection or
-      // a partial-frame snapshot must not fail the job — the reference
-      // drops the bad remainder and keeps running)
-      val (frames, skipped) = MsgpackDecode.unpackFramesLenient(bytes)
-      if (skipped > 0)
-        System.err.println(s"[forward-ingest] skipped $skipped undecodable tail bytes")
-      frames.flatMap { case (tag, entries) =>
-        entries.map(e => Forward.ForwardRow(tag, e.sec, e.nsec, e.record))
-      }
-    }
   }
 
   /** Syslog datagram ingest (`in_syslog` Mode unix_udp/udp): one datagram

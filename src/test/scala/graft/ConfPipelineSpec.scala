@@ -656,6 +656,98 @@ class ConfPipelineSpec extends AnyFunSuite {
     assert(results("flowcounter_0") == 4L)
   }
 
+  // apache lines for `file`, one per (second of 20:17:xx, status code)
+  private def accessLog(dir: String, file: String, hits: Seq[(Int, Int)]): Unit = {
+    val lines = hits.zipWithIndex.map { case ((sec, code), i) =>
+      f"""h$i - u [17/Jul/2017:20:17:$sec%02d +0000] "GET /p/$i HTTP/1.1" $code ${i * 10}"""
+    }
+    Files.writeString(Paths.get(dir, file), lines.mkString("", "\n", "\n"))
+    ()
+  }
+
+  test("throttle honours Match: only matching tags are capped per pane, other tags pass") {
+    val dir = Files.createTempDirectory("graft-conf-throttle").toString
+    // a.log: 3 lines in second 03, 2 in second 04; b.log: 4 lines in
+    // second 03, the same panes as a.log's
+    accessLog(dir, "a.log", Seq(3 -> 200, 3 -> 500, 3 -> 404, 4 -> 200, 4 -> 503))
+    accessLog(dir, "b.log", Seq(3 -> 200, 3 -> 201, 3 -> 202, 3 -> 203))
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/a.log
+         |    Tag    a.log
+         |    Parser apache
+         |[INPUT]
+         |    Name   tail
+         |    Path   $dir/b.log
+         |    Tag    b.log
+         |    Parser apache
+         |[FILTER]
+         |    Name     throttle
+         |    Match    a.*
+         |    Rate     1
+         |    Interval 1s
+         |""".stripMargin
+    val rows = ConfPipeline.load(spark, conf, parsersConf).filtered
+      .select("tag", "ts", "line").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).getTime / 1000 % 60, r.getString(2)))
+    val byTag = rows.groupBy(_._1).withDefaultValue(Array.empty)
+    // every b.log row survives, although a.log filled the same panes
+    assert(byTag("b.log").length == 4)
+    // a.log: Rate 1 per 1 s pane, first by (ts, line) in each second
+    assert(byTag("a.log").map(r => (r._2, r._3)).sorted.toSeq == Seq(
+      3L -> """h0 - u [17/Jul/2017:20:17:03 +0000] "GET /p/0 HTTP/1.1" 200 0""",
+      4L -> """h3 - u [17/Jul/2017:20:17:04 +0000] "GET /p/3 HTTP/1.1" 200 30"""))
+  }
+
+  test("parser filter with Match parses matching tags only; nest then lift over the result") {
+    val dir = Files.createTempDirectory("graft-conf-parser").toString
+    accessLog(dir, "app.log", Seq(3 -> 500, 4 -> 200))
+    Files.writeString(Paths.get(dir, "sys.log"), "kernel: eth0 up\n")
+    val conf =
+      s"""[INPUT]
+         |    Name   tail
+         |    Path   $dir/app.log
+         |    Tag    app.log
+         |[INPUT]
+         |    Name   tail
+         |    Path   $dir/sys.log
+         |    Tag    sys.log
+         |[FILTER]
+         |    Name     parser
+         |    Match    app.*
+         |    Key_Name line
+         |    Parser   apache
+         |[FILTER]
+         |    Name       nest
+         |    Match      *
+         |    Operation  nest
+         |    Wildcard   method
+         |    Wildcard   path
+         |    Nest_under req
+         |[FILTER]
+         |    Name         nest
+         |    Match        *
+         |    Operation    lift
+         |    Nested_under req
+         |    Prefix_with  req_
+         |""".stripMargin
+    val df = ConfPipeline.load(spark, conf, parsersConf).filtered
+    // the parser keeps `line` and drops its Time_Key; nest moved
+    // method/path under req, and lift put them back with the prefix
+    assert(df.columns.toSeq == Seq("line", "file", "tag", "host", "remote_user",
+      "code", "size", "parse_ok", "req_method", "req_path"))
+    val rows = df.select("tag", "code", "parse_ok", "req_method", "req_path", "line").collect()
+    // matching rows are parsed
+    val app = rows.filter(_.getString(0) == "app.log")
+      .map(r => (r.getLong(1), r.getBoolean(2), r.getString(3), r.getString(4))).sortBy(_._1).toSeq
+    assert(app == Seq((200L, true, "GET", "/p/1"), (500L, true, "GET", "/p/0")))
+    // the other tag passes through: line unchanged, no parsed field set
+    val Array(sys) = rows.filter(_.getString(0) == "sys.log")
+    assert(sys.getString(5) == "kernel: eth0 up")
+    assert((1 to 4).forall(sys.isNullAt))
+  }
+
   // a free port found by binding ephemeral then releasing — the conf text
   // needs a concrete number before load() binds (tiny reuse race, but no
   // collision with a fixed constant another process may hold)

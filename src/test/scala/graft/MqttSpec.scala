@@ -144,11 +144,6 @@ class MqttSpec extends AnyFunSuite {
       val msgs = b.drainUntilQuiet()
       assert(msgs.map(_._1) == Seq("sensors/a", "sensors/b"))
       assert(msgs.map(m => new String(m._2, "UTF-8")) == Seq("""{"v":1}""", """{"v":2}"""))
-
-      val df = Mqtt.mqttRows(spark, msgs, "mq.0")
-      val rows = df.orderBy("file").collect()
-      assert(rows.map(_.getAs[String]("topic")).toSeq == Seq("sensors/a", "sensors/b"))
-      assert(rows.forall(_.getAs[String]("tag") == "mq.0"))
     } finally b.close()
   }
 
@@ -190,6 +185,8 @@ class MqttSpec extends AnyFunSuite {
     sock.close()
     val df = Await.result(fut, 30.seconds)
     val rows = df.orderBy("topic").collect()
+    // the frame columns lead, then one column per record key, in key order
+    assert(df.columns.toSeq == Seq("topic", "tag", "temp", "_topic"))
     assert(rows.length == 2) // non-JSON publish dropped
     assert(rows.map(_.getAs[String]("topic")).toSeq == Seq("room/1", "room/2"))
     assert(rows.map(_.getAs[String]("temp")).toSeq == Seq("21", "22"))

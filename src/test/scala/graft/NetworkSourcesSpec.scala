@@ -35,13 +35,19 @@ class NetworkSourcesSpec extends AnyFunSuite {
       s2.getOutputStream.write(frames(0))
       s2.close()
       // connection 3 is GARBAGE on an OPEN socket: the lenient decode must
-      // skip it without failing the job, and the drain must not need EOF
+      // skip it without throwing, and the drain must not need EOF
       val s3 = new java.net.Socket("127.0.0.1", l.port)
       s3.getOutputStream.write("not msgpack at all".getBytes("UTF-8"))
       s3.getOutputStream.flush()
-      val rows = NetworkSources.forwardRows(spark, l.drainUntilQuiet())
-        .collect().map(r => (r.tag, r.sec, r.nsec, r.record)).toSeq
+      // the decoder the conf `forward` input runs over the drained payloads
+      val decoded = l.drainUntilQuiet().map(graft.sinks.MsgpackDecode.unpackFramesLenient)
       s3.close()
+      val rows = decoded.flatMap(_._1).flatMap { case (tag, es) =>
+        es.map(e => (tag, e.sec, e.nsec, e.record))
+      }
+      // the garbage connection decodes to nothing and is skipped whole;
+      // the two frame connections skip no byte
+      assert(decoded.map(_._2).sorted == Seq(0L, 0L, "not msgpack at all".length.toLong))
       assert(rows.size == 5)
       val a1 = ("app.a", 1500000000L, 7L, Map("k" -> "v1"))
       val a2 = ("app.a", 1500000001L, 9L, Map("k" -> "v2"))

@@ -71,22 +71,4 @@ class RouterSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("perSinkFrames filters match the fan-out per sink") {
-    val df = Seq(("app.frontend", 1), ("db.primary", 2)).toDF("tag", "v")
-    val frames = Router.perSinkFrames(df, "tag", sinks).toMap
-    assert(frames("app").count() == 1)
-    assert(frames("all").count() == 2)
-    assert(frames("db").count() == 1)
-  }
-
-  test("disjoint detects overlap; exclusiveSink is first-match") {
-    assert(!Router.disjoint(Seq("app.*", "*")))
-    assert(Router.disjoint(Seq("app.*", "db.*")))
-    assert(!Router.disjoint(Seq("app.*", "app.front*")))
-    val df = Seq(("app.frontend", 1), ("db.primary", 2)).toDF("tag", "v")
-    val out = df.select(col("v"),
-      Router.exclusiveSink(col("tag"), Seq(SinkSpec("app", "app.*"), SinkSpec("db", "db.*"))).as("sink"))
-      .as[(Int, String)].collect().toSet
-    assert(out == Set((1, "app"), (2, "db")))
-  }
 }
