@@ -56,8 +56,7 @@ object RunPipeline {
       // streaming mode: same transform chain under Structured Streaming,
       // AvailableNow over the input snapshots, per-sink aggregates to
       // console (one-shot drain; checkpointLocation makes re-runs resume)
-      import graft.streaming.StreamPipeline
-      val stream = StreamPipeline.tokenStream(spark, s"$workDir/in/*")
+      val stream = TokenTable.tokenStream(spark, s"$workDir/in/*")
       val agg = Pipeline.transform(stream, spec)
         .groupBy(col("sink")).agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("sum_n_tok"))
       val q = agg.writeStream

@@ -737,8 +737,7 @@ object SparkEntry {
     //    cell assignment. Integer sums + floor-division means make every
     //    step bit-reproducible, so the DuckDB oracle re-runs the FULL
     //    unrolled Lloyd independently — centroids AND assignments match
-    //    exactly (kills round-3's one no_oracle row; the float-mean
-    //    variant KMeans.fit stays spec-pinned in KMeansSpec)
+    //    exactly.
     "sim_kmeans_cells" -> ((s, dir) => {
       val e = s.read.parquet(s"$dir/embeddings.parquet")
       val q = e.select(col("vec_id"),

@@ -31,9 +31,10 @@ object FlbTime {
   private def longDiv(a: Column, b: Long): Column = Arith.longDiv(a, b)
 
   /** Envelope from a µs count (ns = µs remainder × 1000; flooring division
-    * keeps pre-epoch instants correct).
+    * keeps pre-epoch instants correct) — the inverse FlbTimeSpec
+    * round-trips `toMicros` through (spec cross-check).
     */
-  def fromMicros(us: Column): Column = {
+  private[graft] def fromMicros(us: Column): Column = {
     val m = pmod(us, lit(1000000L))
     apply(longDiv(us - m, 1000000L), m * 1000L)
   }

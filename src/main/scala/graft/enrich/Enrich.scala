@@ -2,11 +2,8 @@ package graft.enrich
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-import graft.functions.Decoders
-import graft.operators.ParserFilter
-import graft.parsers.{ParserDef, Parsers}
+import graft.parsers.Parsers
 
 /** Kubernetes-style metadata enrichment (reference
   * `plugins/filter_kubernetes/`): extract `(pod_name, namespace,
@@ -58,41 +55,5 @@ object Enrich {
       joined.filter(
         coalesce(element_at(col("kubernetes.annotations"), "fluentbit.io/exclude"), lit("false")) =!= "true")
     else joined
-  }
-
-  /** `Merge_Log` (reference `kubernetes.c:67-147,183-336`): unescape the
-    * container `log` string, JSON-parse it, and splice its keys into the
-    * record — either as top-level columns (flattened) or under
-    * `Merge_JSON_Key`. A log line that is not JSON leaves the record
-    * unchanged (null parsed fields / null sub-struct).
-    */
-  def mergeLog(df: DataFrame, logCol: String, schema: StructType,
-               mergeJsonKey: Option[String] = None): DataFrame = {
-    val parsed = from_json(Decoders.escaped(col(logCol)), schema)
-    mergeJsonKey match {
-      case Some(k) => df.withColumn(k, parsed)
-      case None =>
-        schema.fieldNames.foldLeft(df.withColumn("_ml", parsed))(
-          (d, f) => d.withColumn(f, col("_ml").getField(f))).drop("_ml")
-    }
-  }
-
-  /** Per-pod parser via the `fluentbit.io/parser` annotation
-    * (reference `kube_property.c`, applied `kubernetes.c:425-434`): rows
-    * whose pod metadata names a parser get that parser applied to
-    * `rawCol`; the result is a `map<string,string>` record column (the
-    * union carrier across differently-shaped parsers). Unannotated or
-    * unknown-parser rows get null.
-    */
-  def annotationParser(df: DataFrame, rawCol: String,
-                       parsers: Map[String, ParserDef],
-                       annotationsCol: String = "kubernetes.annotations"): DataFrame = {
-    val pname = element_at(col(annotationsCol), "fluentbit.io/parser")
-    val parsed = parsers.foldRight(lit(null).cast("map<string,string>")) {
-      case ((name, p), rest) =>
-        val st = p.parsed(col(rawCol))
-        when(pname === name, when(p.parseOk(st), ParserFilter.structToMap(p, st))).otherwise(rest)
-    }
-    df.withColumn("parsed_by_annotation", parsed)
   }
 }

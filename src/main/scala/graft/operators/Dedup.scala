@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * pre-tokenized sequences (`tokens: array<int>`) and raw text.
   *
   * Scale notes (the 100 TB story):
-  *   - exact dedup shuffles (hash64, id) pairs — never full rows — then
-  *     joins survivors back (semi-join on keeper ids);
+  *   - exact dedup (the `dedup_exact` query) shuffles (hash64, id)
+  *     pairs — never full rows;
   *   - MinHash/LSH: the signature is computed NARROW (no shuffle, pure
   *     column expressions per row); only the exploded (band_key, id) pairs
   *     shuffle, which is `bands × rows` small fixed-width rows; candidate
@@ -24,25 +24,6 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   val P: Long = 1000000007L
-
-  /** Exact dedup: one representative (min id) per identical content.
-    * Shuffle carries (key, id) only; at scale pre-hash the content column
-    * so the shuffle key is 8 bytes: `groupBy(xxhash64(content))`.
-    */
-  def exact(df: DataFrame, contentCol: String, idCol: String): DataFrame =
-    df.groupBy(col(contentCol))
-      .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_copies"))
-
-  /** Exact dedup at scale: semi-join survivors. Returns the deduplicated
-    * rows (keeper row per content hash).
-    */
-  def exactRows(df: DataFrame, contentCol: String, idCol: String): DataFrame = {
-    val keepers = df
-      .groupBy(xxhash64(col(contentCol)).as("_h"))
-      .agg(min(col(idCol)).as(idCol))
-      .drop("_h")
-    df.join(keepers, Seq(idCol), "left_semi")
-  }
 
   /** Token-shingle hash: s_i = ((t_i·31 + t_{i+1})·31 + t_{i+2}) mod P over
     * 3-shingles of the token array. Engine-portable arithmetic (≤ 5·10⁷
@@ -70,15 +51,6 @@ object Dedup {
     */
   def minhashSigArray(tokens: Column, numHashes: Int): Column =
     graft.functions.MinHashSig(tokens, numHashes)
-
-  /** Named signature columns (mh0…mhN-1). Each column embeds its own copy
-    * of the fused expression — fine for small N or single-column reads;
-    * prefer [[minhashSigArray]] + two projections on hot paths.
-    */
-  def minhashSignature(tokens: Column, numHashes: Int): Seq[Column] = {
-    val arr = minhashSigArray(tokens, numHashes)
-    (0 until numHashes).map(j => element_at(arr, j + 1).as(s"mh$j"))
-  }
 
   /** LSH banding: band key b = a portable combine of `rowsPerBand`
     * consecutive signature slots. Returns array<long> of band keys.
@@ -423,10 +395,8 @@ object Dedup {
     *     more than `maxOcc` occurrences corpus-wide is dropped from the
     *     repeated set entirely, so one ubiquitous boilerplate gram cannot
     *     fan the downstream removal out by its full occurrence count.
-    *     Audit what the cap dropped with
-    *     [[spanGramStats]] before relying on completeness; `maxOcc = 0`
-    *     disables the cap (exact parity with the string-key form —
-    *     DedupSpec asserts row identity).
+    *     `maxOcc = 0` disables the cap (exact parity with the string-key
+    *     form — DedupSpec asserts row identity).
     */
   def crossDocRepeatedSpansHashed(df: DataFrame, idCol: String,
                                   textCol: String, n: Int,
@@ -489,7 +459,7 @@ object Dedup {
     * aggregate, and the covered-offset join all shuffle an 8-byte hash,
     * and the gram STRING never leaves the map side at all (removal needs
     * positions, not text). With `maxOcc > 0`, grams over the occurrence
-    * cap are left in place (not removed) — audit with [[spanGramStats]].
+    * cap are left in place (not removed).
     * Collision semantics follow [[crossDocRepeatedSpansHashed]]; a
     * collision here can additionally merge two grams' keeper elections
     * (one extra occurrence removed) — same ~10^-8 rate. DedupSpec asserts
@@ -505,20 +475,6 @@ object Dedup {
       hashedGramPositions(df, idCol, textCol, n).drop("gram"), "_gh", idCol, maxOcc)
     stripByOffsets(df, idCol, textCol, dropOffsetsFor(spans, idCol, n))
   }
-
-  /** Truncation audit for [[crossDocRepeatedSpansHashed]]'s `maxOcc` cap
-    * (mirrors [[Similarity.srpBucketStats]]): one row per repeated gram
-    * hash with its corpus-wide occurrence count, distinct-doc count, and
-    * whether the cap would drop it.
-    */
-  def spanGramStats(df: DataFrame, idCol: String, textCol: String, n: Int,
-                    maxOcc: Long): DataFrame =
-    df.select(col(idCol),
-        explode(graft.functions.WordGrams(col(textCol), n)).as("gram"))
-      .groupBy(xxhash64(col("gram")).as("gram_hash"))
-      .agg(countDistinct(col(idCol)).as("docs"), count(lit(1)).as("occ"))
-      .filter(col("docs") > 1)
-      .withColumn("truncated", col("occ") > maxOcc)
 
   /** Repeated-span REMOVAL — the rewrite step over
     * [[crossDocRepeatedSpans]]: every flagged gram keeps its canonical

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VecMathFunctions
 
-/** Deterministic Lloyd k-means over an embedding column — the trainer for
-  * the IVF centroid table ([[Similarity.ivfTopK]]'s "at scale they come
-  * from a sampled k-means").
+/** Deterministic Lloyd k-means over an integer-quantized embedding
+  * column — the trainer for the IVF centroid table
+  * ([[Similarity.ivfTopK]]'s "at scale they come from a sampled k-means").
   *
   * Scale shape per iteration:
   *   - assignment: the fused [[graft.functions.NearestCells]] argmin over
@@ -18,68 +18,12 @@ import graft.functions.VecMathFunctions
   *     — the only exchange ships k × dim partial sums per task, never
   *     vectors.
   *
-  * Determinism: init = the k smallest-id vectors (sorted collect); the
-  * per-cell mean is a parallel sum, so exact float values depend on
-  * partition order — centroids are stable to ~ulp across runs, and the
-  * ASSIGNMENT structure (which blob each vector lands in) is deterministic
-  * for separated data (KMeansSpec pins both). Empty cells keep their
-  * previous centroid.
+  * Determinism: init = the k smallest-id vectors (sorted collect); sums
+  * are integer and means floor-divide, so centroids and assignments are
+  * bit-identical across runs and engines. Empty cells keep their previous
+  * centroid.
   */
 object KMeans {
-
-  private class VecMeanAgg(dim: Int)
-      extends Aggregator[Seq[Double], (Array[Double], Long), Seq[Double]] {
-    def zero: (Array[Double], Long) = (new Array[Double](dim), 0L)
-    def reduce(b: (Array[Double], Long), v: Seq[Double]): (Array[Double], Long) = {
-      // a ragged vector would silently contribute zeros for its missing
-      // tail and skew the centroid undetected — fail loudly instead
-      require(v.length == dim, s"ragged vector: length ${v.length} != dim $dim")
-      var i = 0
-      while (i < dim) { b._1(i) += v(i); i += 1 }
-      (b._1, b._2 + 1)
-    }
-    def merge(a: (Array[Double], Long), b: (Array[Double], Long)): (Array[Double], Long) = {
-      var i = 0
-      while (i < dim) { a._1(i) += b._1(i); i += 1 }
-      (a._1, a._2 + b._2)
-    }
-    def finish(b: (Array[Double], Long)): Seq[Double] =
-      if (b._2 == 0) Seq.empty else b._1.toSeq.map(_ / b._2)
-    def bufferEncoder: Encoder[(Array[Double], Long)] =
-      Encoders.product[(Array[Double], Long)]
-    def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder[Seq[Double]]()
-  }
-
-  /** Train k centroids with `iters` Lloyd iterations.
-    *
-    * @return (cent_id: long 0..k−1, cvec: array<double>) — plugs straight
-    *         into [[Similarity.ivfAssign]]/[[Similarity.ivfTopK]]
-    */
-  def fit(df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int): DataFrame = {
-    require(k >= 1 && iters >= 0, s"k=$k iters=$iters")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val seed = df.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Number](0).map(_.doubleValue).toArray)
-    require(seed.length == k, s"need at least $k vectors, found ${seed.length}")
-    val dim = seed.head.length
-    val centIds = Array.tabulate(k)(_.toLong)
-    var cents = seed
-
-    for (_ <- 0 until iters) {
-      val assigned = df.select(
-        element_at(VecMathFunctions.nearestCells(col(vecCol), centIds, cents, 1), 1).as("cell"),
-        col(vecCol).cast("array<double>").as("v"))
-      val means = assigned.groupBy(col("cell"))
-        .agg(udaf(new VecMeanAgg(dim), ExpressionEncoder[Seq[Double]]())(col("v")).as("c"))
-        .as[(Long, Seq[Double])].collect().toMap
-      cents = centIds.map(i => means.get(i).filter(_.nonEmpty).map(_.toArray)
-        .getOrElse(cents(i.toInt)))
-    }
-    cents.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("cent_id", "cvec")
-  }
 
   private class VecMeanIntAgg(dim: Int)
       extends Aggregator[Seq[Long], (Array[Long], Long), Seq[Long]] {
@@ -107,9 +51,8 @@ object KMeans {
   }
 
   /** Fully ORACLE-CHECKABLE Lloyd k-means over INTEGER-QUANTIZED vectors
-    * (the round-3 advice: float per-cell means are parallel sums, not
-    * bit-reproducible across engines — integer sums and floor-division
-    * means are). Same per-iteration scale shape as [[fit]]: fused
+    * (float per-cell means are parallel sums, not bit-reproducible across
+    * engines — integer sums and floor-division means are): fused
     * [[graft.functions.NearestCells]] assignment (integer values are exact
     * in doubles far below 2⁵³), k-bounded integer-sum aggregator with
     * map-side combine, k centroids collected per iteration.
@@ -148,13 +91,4 @@ object KMeans {
     cents.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
       .toDF("cent_id", "qvec")
   }
-
-  /** Within-cluster sum of squared L2 distances for a centroid table —
-    * the Lloyd objective (each iteration must not increase it).
-    */
-  def sse(df: DataFrame, vecCol: String, centroids: DataFrame): Double =
-    Similarity.ivfAssign(df, vecCol, vecCol, centroids)
-      .join(centroids, col("cell") === col("cent_id"))
-      .agg(sum(Similarity.l2sq(col(vecCol), col("cvec"))))
-      .collect()(0).getDouble(0)
 }

@@ -70,14 +70,4 @@ object Packing {
         when(col("_eff") > 0,
           longDiv(col("_lcum") + col("_off") - 1, ctxLen)).as("last_chunk"))
   }
-
-  /** Exploded (id, chunk_id) membership — one row per window a document
-    * overlaps (loaders that index windows → member docs).
-    */
-  def chunkMembers(df: DataFrame, idCol: String, nTokCol: String,
-                   ctxLen: Long, sepTokens: Long = 0, buckets: Int = 32): DataFrame =
-    packedSpans(df, idCol, nTokCol, ctxLen, sepTokens, buckets)
-      .filter(col("first_chunk").isNotNull)
-      .select(col(idCol),
-        explode(sequence(col("first_chunk"), col("last_chunk"))).as("chunk_id"))
 }

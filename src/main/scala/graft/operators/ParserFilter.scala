@@ -12,12 +12,11 @@ import graft.parsers.ParserDef
   * (`:264-270`); parsed time overrides the record ts when non-zero
   * (`:260-263`); on failure the record passes UNCHANGED.
   *
-  * Two faces:
-  *   - [[onMap]] — faithful dynamic-record semantics over a
-  *     `map<string,string>` column (per-row schema divergence preserved);
-  *   - [[flatten]] — fixed-schema face: parsed fields appended as typed
-  *     columns plus a `parse_ok` flag (the idiomatic Spark shape for
-  *     downstream relational work).
+  * [[flatten]] is the fixed-schema face the conf `parser` filter runs:
+  * parsed fields appended as typed columns plus a `parse_ok` flag (the
+  * idiomatic Spark shape for downstream relational work). [[onMap]] keeps
+  * the dynamic-record semantics over a `map<string,string>` column
+  * (per-row schema divergence preserved) as the reference the specs pin.
   */
 object ParserFilter {
 
@@ -25,7 +24,11 @@ object ParserFilter {
   private[graft] def structToMap(parser: ParserDef, p: Column): Column =
     map(parser.outputNames.flatMap(n => Seq(lit(n), p.getField(n).cast("string"))): _*)
 
-  def onMap(recordCol: String, keyName: String, parser: ParserDef,
+  /** Reference dynamic-record formulation (spec-pinned Reserve_Data /
+    * Preserve_Key matrix and full [[DecoderChain]]): the conf `parser`
+    * filter runs [[flatten]].
+    */
+  private[graft] def onMap(recordCol: String, keyName: String, parser: ParserDef,
             reserveData: Boolean = false, preserveKey: Boolean = false)
            (df: DataFrame): DataFrame = {
     val rec = col(recordCol)

@@ -10,22 +10,15 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Keep a row iff `xxhash64(key) mod 100 < pct` — the library default
-    * (xxhash64 is Spark-native and uniform; the complement is exactly the
-    * other rows).
-    */
-  def hashSample(df: DataFrame, keyCol: String, pct: Int): DataFrame =
-    df.filter(pmod(xxhash64(col(keyCol)), lit(100L)) < pct)
-
-  /** Engine-portable variant over an int64 key: multiplicative hash
-    * `pmod(key·2654435761, 100) < pct` — any engine reproduces the exact
-    * row set (the cross-engine-auditable face; weaker mixing than
-    * xxhash64, fine for ids without adversarial structure). pmod keeps
-    * NEGATIVE keys correctly sampled (C-style % would put every negative
-    * key's remainder below pct). Portable domain: |key| < 2³¹ (the
-    * product must not overflow in engines that error on int64 overflow —
-    * DuckDB does; Java wraps). For non-negative keys the expression
-    * equals plain `%`, so SQL oracles can use either.
+  /** Keep a row iff the multiplicative hash of its int64 key,
+    * `pmod(key·2654435761, 100) < pct`, holds — any engine reproduces the
+    * exact row set, and the complement is exactly the other rows (weaker
+    * mixing than xxhash64, fine for ids without adversarial structure).
+    * pmod keeps NEGATIVE keys correctly sampled (C-style % would put every
+    * negative key's remainder below pct). Portable domain: |key| < 2³¹
+    * (the product must not overflow in engines that error on int64
+    * overflow — DuckDB does; Java wraps). For non-negative keys the
+    * expression equals plain `%`, so SQL oracles can use either.
     */
   def hashSamplePortable(df: DataFrame, keyCol: String, pct: Int): Column =
     pmod(col(keyCol) * 2654435761L, lit(100L)) < pct

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * scripting language IS Scala, so the protocol is a typed function on a
   * `Dataset[T]` — compile-time checked, serialized once, no VM bridge.
   * Stateless by contract (like the lua callback); stateful logic belongs
-  * in `mapGroupsWithState` (see StreamPipeline.throttle).
+  * in Spark's `flatMapGroupsWithState`.
   */
 object Scripted {
 

@@ -49,9 +49,9 @@ object Similarity {
   /** Exact brute-force top-k neighbors for each query vector.
     *
     * Contract (inherited from [[TopK.perGroupWithOrd]], same for
-    * [[lshTopK]]/[[ivfTopK]]): candidate ids must be INTEGRAL — they are
-    * cast to long and returned as LongType (a non-numeric id casts to null
-    * and is rejected up front). Candidates whose cosine is null (zero-norm
+    * [[ivfTopK]]): candidate ids must be INTEGRAL — they are cast to long
+    * and returned as LongType (a non-numeric id casts to null and is
+    * rejected up front). Candidates whose cosine is null (zero-norm
     * vectors, length mismatches) are EXCLUDED — a window formulation would
     * rank them last; a k-bounded buffer has no slot for "unordered". On
     * non-null scores the result is row-identical to the window form
@@ -107,24 +107,6 @@ object Similarity {
       when(proj > 0, lit(1L << p)).otherwise(lit(0L))
     }
     terms.reduce(_ + _)
-  }
-
-  /** LSH-bucketed ANN: candidates and queries bucketed by [[srpBucket]];
-    * cosine evaluated only within matching buckets. Returns top-k per query
-    * among same-bucket candidates (approximate — misses cross-bucket
-    * neighbors by design; raise `planes` ⇒ smaller buckets, more recall
-    * loss; this is the scan-cost/recall dial).
-    */
-  def lshTopK(queries: DataFrame, qid: String, qvec: String,
-              cands: DataFrame, cid: String, cvec: String,
-              k: Int, planes: Int = 8): DataFrame = {
-    val qb = queries.withColumn("_bucket", srpBucket(col(qvec), planes))
-    val cb = cands.withColumn("_bucket", srpBucket(col(cvec), planes))
-    val joined = cb.join(broadcast(qb), Seq("_bucket")).filter(col(qid) =!= col(cid))
-    val scored = joined.withColumn("cos", cosine(col(qvec), col(cvec)))
-    TopK.perGroupWithOrd(scored.select(col(qid), col("cos"), col(cid)),
-        qid, "cos", cid, k)
-      .select(col(qid), col(cid), col("cos"), col("rank"))
   }
 
   /** Squared L2 distance (sequential fold — engine-portable like [[dot]]). */
@@ -270,13 +252,9 @@ object Similarity {
     struct(scale.as("scale"), q.as("q"))
   }
 
-  /** Dequantize int8 codes back to doubles (qᵢ·scale). */
-  def dequantizeInt8(qstruct: Column): Column =
-    transform(qstruct.getField("q"), x => x.cast("double") * qstruct.getField("scale"))
-
   /** Bucket-size audit for the SRP paths: (bucket, n, truncated) — run
-    * before [[embeddingNearDupPairs]]/[[lshTopK]] to see how much a
-    * `maxBucket` cap would drop (the no-silent-caps companion).
+    * before [[embeddingNearDupPairs]] to see how much a `maxBucket` cap
+    * would drop (the no-silent-caps companion).
     */
   def srpBucketStats(df: DataFrame, vecCol: String, planes: Int,
                      maxBucket: Int): DataFrame =

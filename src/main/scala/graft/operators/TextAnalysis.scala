@@ -4,11 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data curation: language-ID (marker n-gram
-  * heuristic), quality scoring (length/punct/stopword ratios), token
+  * heuristic), quality components (length/punct/stopword counts), token
   * counting (whitespace + BPE-ish regex), and document fingerprinting
   * (rolling hash). All pure column expressions — narrow, codegen'd,
-  * shuffle-free; integer-exact components are split out so cross-engine
-  * oracles avoid float division.
+  * shuffle-free; the quality components stay integer-exact so
+  * cross-engine oracles avoid float division.
   */
 object TextAnalysis {
 
@@ -33,29 +33,18 @@ object TextAnalysis {
   val Stopwords: Seq[String] =
     Seq("the", "a", "an", "is", "are", "of", "and", "or", "to", "in")
 
-  def stopwordCount(text: Column): Column =
+  // Reference column formulations of the quality fields of [[stats]]
+  // (spec cross-check: the fused pass must equal them)
+  private[graft] def stopwordCount(text: Column): Column =
     size(filter(words(text), w => w.isin(Stopwords: _*)))
 
-  def punctCount(text: Column): Column =
+  private[graft] def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,!?;:]", ""))
 
-  def distinctWordCount(text: Column): Column = size(array_distinct(words(text)))
+  private[graft] def distinctWordCount(text: Column): Column = size(array_distinct(words(text)))
 
-  def sumWordLen(text: Column): Column =
+  private[graft] def sumWordLen(text: Column): Column =
     aggregate(words(text), lit(0L), (acc, w) => acc + length(w))
-
-  /** Composite quality score in [0,1]: balanced stopword ratio, moderate
-    * word length, lexical diversity. Float-valued — library/test use; the
-    * oracle-checked queries expose the integer components instead.
-    */
-  def qualityScore(text: Column): Column = {
-    val n = tokenCountWs(text).cast("double")
-    val stopR = stopwordCount(text) / n
-    val diversity = distinctWordCount(text) / n
-    val avgLen = sumWordLen(text) / n
-    val lenOk = when(avgLen.between(2.0, 12.0), 1.0).otherwise(0.5)
-    least(lit(1.0), (stopR * 2 + diversity + lit(0.5)) / 2.5 * lenOk)
-  }
 
   // ------------------------------------------------------------- lang id
   /** Marker-word tables for the n-gram/stopword language heuristic. */
@@ -66,13 +55,14 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ein")
   )
 
-  def langScore(text: Column, markers: Seq[String]): Column =
+  private def langScore(text: Column, markers: Seq[String]): Column =
     size(filter(words(text), w => lower(w).isin(markers: _*)))
 
-  /** Predicted language: argmax of marker scores with fixed priority order
-    * on ties (en > fr > es > de), 'und' (undetermined) when all zero.
+  /** Reference column formulation of [[languageIdFrom]] (spec
+    * cross-check): argmax of marker scores with fixed priority order on
+    * ties (en > fr > es > de), 'und' (undetermined) when all zero.
     */
-  def languageId(text: Column): Column = {
+  private[graft] def languageId(text: Column): Column = {
     val scores = LangMarkers.map { case (l, m) => l -> langScore(text, m) }
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
     scores.foldRight(lit("und"): Column) { case ((l, s), rest) =>
@@ -83,8 +73,8 @@ object TextAnalysis {
   // ---------------------------------------------------------- fused path
   /** All text statistics in ONE pass (see [[graft.functions.TextStats]]):
     * struct(n_words, n_uniq, sum_wlen, n_punct, n_stop, s_<lang>…, fp).
-    * Values identical to the composable functions above; use on hot paths
-    * (the composable forms are interpreted higher-order functions).
+    * Values identical to the reference formulations above, which are
+    * interpreted higher-order functions kept for the spec cross-check.
     */
   def stats(text: Column): Column = graft.functions.TextStats(text)
 
@@ -118,12 +108,13 @@ object TextAnalysis {
   /** Per-word key for the rolling hash: 96·len(w) + ascii(first char) —
     * engine-portable (ascii('')=0 in both Spark and DuckDB).
     */
-  def wordKey(w: Column): Column = length(w).cast("long") * 96L + ascii(w)
+  private def wordKey(w: Column): Column = length(w).cast("long") * 96L + ascii(w)
 
-  /** Document fingerprint: left-fold rolling hash
-    * h ← (h·31 + key(w)) mod P over the word sequence — order-sensitive
-    * (a permutation changes the print), collision-tolerant dedup key.
+  /** Reference column formulation of `stats`' `fp` (spec cross-check):
+    * left-fold rolling hash h ← (h·31 + key(w)) mod P over the word
+    * sequence — order-sensitive (a permutation changes the print),
+    * collision-tolerant dedup key.
     */
-  def fingerprint(text: Column): Column =
+  private[graft] def fingerprint(text: Column): Column =
     aggregate(words(text), lit(0L), (acc, w) => (acc * 31L + wordKey(w)) % P)
 }

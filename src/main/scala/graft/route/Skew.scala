@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
   *     pre-aggregated rows).
   *   - aggregates WITHOUT partial pushdown (`collect_list`, exact
   *     `distinct` per key): two-phase salted aggregation ([[saltedAgg]]).
-  *   - joins keyed on the hot column: [[saltedJoin]] replicates the
-  *     small side per salt; on Spark 3+ prefer AQE skew-join
-  *     (`spark.sql.adaptive.skewJoin.enabled`, on by default) and keep
-  *     salting for the cases AQE cannot split. VERIFIED LIMIT (AqeSkewSpec):
-  *     OptimizeSkewedJoin only matches SMJ(Sort(Shuffle), Sort(Shuffle)) —
-  *     an aggregate (e.g. `.distinct()`) between a side's shuffle and the
-  *     join blocks the split, so at scale MATERIALIZE derived dimension
-  *     tables before joining them against skewed facts, or salt.
+  *   - joins keyed on the hot column: AQE skew-join
+  *     (`spark.sql.adaptive.skewJoin.enabled`, on by default). VERIFIED
+  *     LIMIT (AqeSkewSpec): OptimizeSkewedJoin only matches
+  *     SMJ(Sort(Shuffle), Sort(Shuffle)) — an aggregate (e.g.
+  *     `.distinct()`) between a side's shuffle and the join blocks the
+  *     split, so at scale MATERIALIZE derived dimension tables before
+  *     joining them against skewed facts.
   */
 object Skew {
 
@@ -44,17 +43,5 @@ object Skew {
       .groupBy(keys.map(col): _*)
       .agg(sum(col("_cnt")).as("cnt"),
         sumCols.map(c => sum(col(s"_sum_$c")).as(s"sum_$c")): _*)
-  }
-
-  /** Skew join: fact side salted, small side replicated n× — each hot
-    * fact key spreads over n tasks. Use when the small side is too big to
-    * broadcast and AQE's split is insufficient.
-    */
-  def saltedJoin(fact: DataFrame, small: DataFrame, key: String,
-                 saltFrom: Column, n: Int, joinType: String = "inner"): DataFrame = {
-    val saltedFact = fact.withColumn("_salt", salt(saltFrom, n))
-    val replicated = small.withColumn("_salt", explode(
-      sequence(lit(0L), lit(n.toLong - 1))))
-    saltedFact.join(replicated, Seq(key, "_salt"), joinType).drop("_salt")
   }
 }

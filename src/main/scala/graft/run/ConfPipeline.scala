@@ -40,8 +40,8 @@ import graft.sources.{Samplers, TailSource}
   * keeps every row of another tag. DEVIATION: the column-rewriting
   * filters `record_modifier`, `nest` and `modify` apply to ALL rows
   * regardless of Match — a fixed-schema frame cannot hold per-row column
-  * sets; route such configs through the map-record operators (`Modify`,
-  * `ParserFilter.onMap`) when per-tag schema divergence matters.
+  * sets; route such configs through the map-record operator `Modify`
+  * when per-tag schema divergence matters.
   */
 object ConfPipeline {
 

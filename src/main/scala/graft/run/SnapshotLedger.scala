@@ -83,7 +83,10 @@ class SnapshotLedger(val root: String) {
       Serialization.write(c))
   }
 
-  def readCommit(sink: String, snapshotId: Long): Option[SinkCommit] = {
+  /** A sink's commit marker for one snapshot, as [[commit]] wrote it
+    * (spec cross-check).
+    */
+  private[graft] def readCommit(sink: String, snapshotId: Long): Option[SinkCommit] = {
     val p = commitDir(sink).resolve(f"snap-$snapshotId%05d.json")
     if (Files.exists(p)) Some(JsonMethods.parse(Files.readString(p)).extract[SinkCommit])
     else None

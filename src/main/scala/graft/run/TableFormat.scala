@@ -13,7 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * |-------------------------|-------------------------------------------|
   * | `Snapshot.id`           | snapshot-id                               |
   * | `Snapshot.files`        | manifest → data files                     |
-  * | `snapshotsSince(id)`    | incremental scan (`start-snapshot-id`)    |
   * | `read(snapshot)`        | `spark.read.option("snapshot-id", …)`     |
   * | ledger commit markers   | consumer-side watermark table             |
   *
@@ -22,8 +21,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 trait SnapshotTable {
   def snapshots: Seq[Snapshot]
-  def snapshotsSince(exclusiveId: Long): Seq[Snapshot] =
-    snapshots.filter(_.id > exclusiveId)
   def read(spark: SparkSession, snapshot: Snapshot): DataFrame
 }
 

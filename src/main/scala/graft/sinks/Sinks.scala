@@ -4,46 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Sink-side operators. Network connectors are out of scope (SURVEY §2.5);
-  * what remains is (a) the two aggregate sinks (`counter`, `flowcounter`)
-  * that form the per-sink correctness oracles, and (b) the byte-exact
-  * record payloads of the network clients (es, influxdb, nats, http,
-  * splunk) plus kafka's topic pick. out_file and out_stdout lines live in
-  * [[FileFormat]]; every `{…}` record map below goes through
+  * what remains is the byte-exact record payloads of the network clients
+  * (es, influxdb, nats, http, splunk) plus kafka's topic pick. The
+  * aggregate sinks (`counter`, `flowcounter`) are plain `groupBy`
+  * aggregates in the queries that use them. out_file and out_stdout lines
+  * live in [[FileFormat]]; every `{…}` record map below goes through
   * [[FileFormat.recordMap]], which also applies the ES key sanitize
   * (`.`→`_`, `es.c:40-110`).
   */
 object Sinks {
-
-  /** `out_counter` (`plugins/out_counter/counter.c:58-84`): running record
-    * count per sink — as a batch aggregate, `count(*)` (+ `sum(n_tok)` for
-    * the BASELINE per-sink aggregate oracle).
-    */
-  def counter(df: DataFrame, sinkCol: String = "sink"): DataFrame =
-    df.groupBy(col(sinkCol))
-      .agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("sum_n_tok"))
-
-  /** `out_flowcounter` (`plugins/out_flowcounter/out_flowcounter.c:106-130`):
-    * tumbling-window per-tick counts and byte/row sums. `unit` follows the
-    * reference's second/minute/hour/day ticks.
-    */
-  def flowCounter(df: DataFrame, tsCol: String, unit: String,
-                  sumCol: Option[String] = None): DataFrame = {
-    val bucket = date_trunc(unit, col(tsCol)).as("wstart")
-    val aggs = count(lit(1)).as("cnt") +: sumCol.map(c => sum(col(c)).as("sum_val")).toSeq
-    df.groupBy(bucket).agg(aggs.head, aggs.tail: _*)
-  }
 
   /** `out_kafka` per-record topic selection (`kafka.c:104-133`): topic =
     * record[topicKey] if present else default.
     */
   def kafkaTopic(topicKeyCol: Column, defaultTopic: String): Column =
     coalesce(topicKeyCol, lit(defaultTopic))
-
-  /** ES logstash-style daily index name `prefix-YYYY.MM.DD`
-    * (`es.c:245-266`).
-    */
-  def esLogstashIndex(ts: Column, prefix: String): Column =
-    concat(lit(prefix + "-"), date_format(ts, "yyyy.MM.dd"))
 
   /** One ES Bulk-API chunk per record (`plugins/out_es/es_bulk.h:27-28` +
     * `es.c:229-287`): the index action line

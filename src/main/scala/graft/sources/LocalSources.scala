@@ -42,23 +42,6 @@ object HeadSource {
     val tagged = base.withColumn("tag", TailSource.composeTag(tagPattern, col("file")))
     if (addPath) tagged.withColumn("path", col("file")) else tagged
   }
-
-  /** `Split_line On` mode (`in_head.c:199-244`): the first 10 lines as a
-    * map record `{line0: …, line9: …}` (+ path when `addPath`).
-    */
-  def splitLines(spark: SparkSession, pathGlob: String, tagPattern: String = "*",
-                 lines: Int = 10, addPath: Boolean = false): DataFrame = {
-    val ls = slice(split(regexp_replace(col("value"), "\n\\z", ""), "\n"), 1, lines)
-    val rec0 = map_from_arrays(
-      transform(sequence(lit(0), size(ls) - 1), i => concat(lit("line"), i)), ls)
-    val rec = if (addPath) map_concat(map(lit("path"), col("file")), rec0) else rec0
-    val (reader, paths) = TailSource.globbed(spark, pathGlob)
-    reader.option("wholetext", "true").text(paths: _*)
-      .select(input_file_name().as("file"), col("value"))
-      .select(col("file"), rec.as("record"))
-      .withColumn("tag", TailSource.composeTag(tagPattern, col("file")))
-      .drop("value")
-  }
 }
 
 object StdinSource {

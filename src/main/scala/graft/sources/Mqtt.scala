@@ -77,9 +77,10 @@ object Mqtt {
     */
   val pingRespBytes: Array[Byte] = Array(0xd0, 0x02).map(_.toByte)
 
-  // ---- client-side encoders (spec fixtures + the oracle queries; the
-  //      reference is broker-only, so these follow the MQTT 3.1.1 spec
-  //      layouts its clients send)
+  // ---- client-side encoders (PUBLISH for the oracle queries; the rest
+  //      are the client packets MqttSpec sends; the reference is
+  //      broker-only, so these follow the MQTT 3.1.1 spec layouts its
+  //      clients send)
 
   private def str16(s: String): Array[Byte] = {
     val b = s.getBytes("UTF-8")
@@ -89,7 +90,7 @@ object Mqtt {
   /** Minimal well-formed CONNECT (protocol name MQTT, level 4, clean
     * session, no will/auth).
     */
-  def connectBytes(clientId: String = "graft"): Array[Byte] = {
+  private[graft] def connectBytes(clientId: String = "graft"): Array[Byte] = {
     val vh = str16("MQTT") ++ Array[Byte](4, 2, 0, 60) ++ str16(clientId)
     packetHeader(CONNECT, vh.length) ++ vh
   }
@@ -110,8 +111,8 @@ object Mqtt {
     head ++ body
   }
 
-  def pingReqBytes: Array[Byte] = packetHeader(PINGREQ, 0)
-  def disconnectBytes: Array[Byte] = packetHeader(DISCONNECT, 0)
+  private[graft] def pingReqBytes: Array[Byte] = packetHeader(PINGREQ, 0)
+  private[graft] def disconnectBytes: Array[Byte] = packetHeader(DISCONNECT, 0)
 
   // ---- decode
 

@@ -48,7 +48,6 @@ object NetworkSources {
     val port: Int = ss.getLocalPort
     private val conns = new ConcurrentLinkedQueue[ConnBuf]()
     private val openSockets = new ConcurrentLinkedQueue[Socket]()
-    private val dropped = new java.util.concurrent.atomic.AtomicLong
     @volatile private var lastActivity = System.nanoTime()
     private val started = new CountDownLatch(1)
     private val acceptor = new Thread(() => {
@@ -85,7 +84,6 @@ object NetworkSources {
             // connections too) — a silently truncated payload would crash
             // the distributed decode mid-frame downstream
             conns.remove(buf)
-            dropped.incrementAndGet()
             System.err.println(s"[graft-listener] dropping connection > $maxConnBytes bytes")
             return
           }
@@ -98,9 +96,6 @@ object NetworkSources {
         case _: java.io.IOException => () // closed under us / peer reset
       } finally { buf.closed = true; s.close(); openSockets.remove(s) }
     }
-
-    /** Connections dropped for exceeding `maxConnBytes`. */
-    def droppedConnections: Long = dropped.get
 
     /** Block until at least one payload has arrived AND `quietMillis` have
       * passed with no traffic (or `timeoutMillis` elapses), then snapshot

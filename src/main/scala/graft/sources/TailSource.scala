@@ -13,14 +13,9 @@ import org.apache.spark.sql.functions._
   * checkpoint (`tail_db.c:91-145`) maps to the snapshot ledger
   * ([[graft.run.SnapshotLedger]]): a committed file group is never re-read.
   *
-  * Two read modes:
-  *   - [[lines]] — `spark.read.text` + `input_file_name()`: fully
-  *     distributed, large files split across tasks; NO stable line
-  *     numbers (fine for stateless parse/filter pipelines).
-  *   - [[linesNumbered]] — `wholetext` + `posexplode`: exact per-file line
-  *     numbers for multiline assembly; one task per file, so only for
-  *     inputs where a file fits an executor (the reference's multiline is
-  *     likewise per-file sequential).
+  * [[lines]] reads with `spark.read.text` + `input_file_name()`: fully
+  * distributed, large files split across tasks; no line numbers (the
+  * stateless parse/filter pipelines need none).
   */
 object TailSource {
 
@@ -66,22 +61,11 @@ object TailSource {
       input_file_name().as("file"),
       composeTag(tagPattern, input_file_name()).as("tag"))
   }
-
-  def linesNumbered(spark: SparkSession, pathGlob: String, tagPattern: String = "*"): DataFrame = {
-    val (reader, paths) = globbed(spark, pathGlob)
-    reader.option("wholetext", "true").text(paths: _*)
-      .select(input_file_name().as("file"), col("value"))
-      .select(col("file"),
-        posexplode(split(col("value"), "\n")).as(Seq("line_no", "line")))
-      .filter(col("line") =!= "") // trailing newline artifact
-      .withColumn("tag", composeTag(tagPattern, col("file")))
-  }
 }
 
-/** Deterministic synthetic inputs mirroring the reference's test/dev
-  * sources: `in_dummy` repeats a fixed record (`plugins/in_dummy/
-  * in_dummy.c:36-61`), `in_random` emits `{"rand_value": N}` samples
-  * (`plugins/in_random/random.c`). Both seeded/derived — never wall clock.
+/** Deterministic synthetic input mirroring the reference's `in_dummy`,
+  * which repeats a fixed record (`plugins/in_dummy/in_dummy.c:36-61`),
+  * with sequenced timestamps — never wall clock.
   */
 object Generators {
   /** n copies of a fixed JSON-ish record with sequenced timestamps. */
@@ -93,9 +77,4 @@ object Generators {
       to_timestamp(lit(baseEpoch) + col("id") / ratePerSec).as("ts"),
       map(cols: _*).as("record"))
   }
-
-  /** Seeded uniform samples as `rand_value`. */
-  def random(spark: SparkSession, n: Long, seed: Long = 42): DataFrame =
-    spark.range(n).select(col("id"),
-      (rand(seed) * Long.MaxValue).cast("long").as("rand_value"))
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The BASELINE input table: pre-tokenized training sequences of shape
   * `(doc_id: string, tokens: array<int32>, n_tok: int32, source: string)`
@@ -90,6 +91,21 @@ object TokenTable {
     */
   def synthetic(spark: SparkSession, n: Long, numPartitions: Int = 32): DataFrame =
     withDerived(spark.range(0L, n, 1L, numPartitions).select(col("id").as("seq")))
+
+  /** The shape both paths generate, for schema-required streaming reads. */
+  val tokenSchema: StructType = StructType(Seq(
+    StructField("seq", LongType),
+    StructField("doc_id", StringType),
+    StructField("tokens", ArrayType(IntegerType)),
+    StructField("n_tok", IntegerType),
+    StructField("source", StringType)))
+
+  /** A directory of TokenTable parquet files as a stream: the batch
+    * `Pipeline.transform` runs on it unchanged (batch-first, streaming as
+    * a wrapper — SURVEY §1.3).
+    */
+  def tokenStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(tokenSchema).parquet(dir)
 
   /** Token array for an arbitrary generator index column — used to
     * manufacture guaranteed duplicates (e.g. `g = seq - seq % 2` makes

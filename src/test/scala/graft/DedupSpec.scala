@@ -14,25 +14,28 @@ class DedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("exactRows keeps one representative per identical content") {
-    val df = Seq((1L, "aaa"), (2L, "aaa"), (3L, "bbb")).toDF("id", "text")
-    val out = Dedup.exactRows(df, "text", "id")
-    assert(out.select("id").as[Long].collect().toSet == Set(1L, 3L))
+    // the dedup_exact query: one (min-id keeper, copies) row per content
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-exact").toString
+    Seq((1L, "aaa"), (2L, "aaa"), (3L, "bbb")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val out = SparkEntry.queries("dedup_exact")(spark, dir)
+    assert(out.as[(Long, Long)].collect().toSet == Set((1L, 2L), (3L, 1L)))
   }
 
   test("minhash signature: identical token arrays → identical signatures") {
     val df = Seq(
       (1L, Seq(10, 20, 30, 40)), (2L, Seq(10, 20, 30, 40)), (3L, Seq(9, 9, 9, 9))
     ).toDF("id", "tokens")
-    val sig = df.select(col("id") +: Dedup.minhashSignature(col("tokens"), 4): _*)
-      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong).toSeq).toMap
+    val sig = df.select(col("id"), Dedup.minhashSigArray(col("tokens"), 4))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sig(1L) == sig(2L))
     assert(sig(1L) != sig(3L))
   }
 
   test("minhash signature of short rows (<3 tokens) is the sentinel P") {
     val df = Seq((1L, Seq(5))).toDF("id", "tokens")
-    val row = df.select(Dedup.minhashSignature(col("tokens"), 2): _*).collect()(0)
-    assert(row.getLong(0) == Dedup.P && row.getLong(1) == Dedup.P)
+    val sig = df.select(Dedup.minhashSigArray(col("tokens"), 2)).collect()(0).getSeq[Long](0)
+    assert(sig == Seq(Dedup.P, Dedup.P))
   }
 
   test("lshCandidatePairs recovers manufactured duplicate pairs") {
@@ -264,11 +267,6 @@ class DedupSpec extends AnyFunSuite {
     val capped = rows(Dedup.crossDocRepeatedSpansHashed(docs, "doc_id", "text", 5,
       maxOcc = 9L))
     assert(capped == Set((1L, 1, "a b c d e"), (2L, 2, "a b c d e")))
-    // audit sees the dropped gram: one repeated hash with occ 10, truncated
-    val stats = Dedup.spanGramStats(docs, "doc_id", "text", 5, maxOcc = 9L)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    assert(stats.count(_._3) == 1)
-    assert(stats.find(_._3).get == ((10L, 10L, true)))
   }
 
   test("stripRepeatedSpans keeps the canonical occurrence, rewrites the rest") {

@@ -46,56 +46,6 @@ class EnrichSpec extends AnyFunSuite {
     assert(out.select("v").as[Int].collect().toSet == Set(2))
   }
 
-  test("Merge_Log: unescape + JSON-parse the log field, flatten or nest (kubernetes.c:67-147)") {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("level", StringType), StructField("msg", StringType)))
-    val df = Seq(
-      (1, """{\"level\":\"warn\",\"msg\":\"disk\"}"""), // escaped JSON (docker-style)
-      (2, "plain text line")
-    ).toDF("id", "log")
-    val flat = Enrich.mergeLog(df, "log", schema)
-    val rows = flat.select("id", "level", "msg").collect().map(r => r.getInt(0) -> r).toMap
-    assert(rows(1).getString(1) == "warn" && rows(1).getString(2) == "disk")
-    assert(rows(2).isNullAt(1)) // non-JSON log: record passes, fields null
-    val nested = Enrich.mergeLog(df, "log", schema, mergeJsonKey = Some("log_processed"))
-    assert(nested.filter($"id" === 1).select("log_processed.level").as[String].collect()(0) == "warn")
-  }
-
-  test("fluentbit.io/parser annotation selects a per-pod parser (kube_property.c)") {
-    val clf = """h - u [17/Jul/2017:20:17:03 +0000] "GET /x HTTP/1.1" 200 7"""
-    val df = Seq(
-      (1, clf, Map("fluentbit.io/parser" -> "apache")),
-      (2, clf, Map.empty[String, String]),
-      (3, clf, Map("fluentbit.io/parser" -> "nope"))
-    ).toDF("id", "raw", "annotations")
-      .withColumn("kubernetes", struct(col("annotations")))
-    val out = Enrich.annotationParser(df, "raw", Map("apache" -> graft.parsers.Parsers.apache))
-    val got = out.select("id", "parsed_by_annotation").collect()
-      .map(r => r.getInt(0) -> Option(r.getMap[String, String](1)).map(_.toMap)).toMap
-    assert(got(1).get("code") == "200")
-    assert(got(2).isEmpty)
-    assert(got(3).isEmpty)
-  }
-
-  test("annotation parser keys are the parse's output keys: aliased groups, json without its time key") {
-    import graft.parsers.Parsers
-    val kube = "var.log.containers.web-3_default_nginx-" + hex + ".log"
-    val json = """{"log":"hi","stream":"stdout","time":"17/Jul/2017:20:17:03 +0000"}"""
-    val df = Seq(
-      (1, kube, Map("fluentbit.io/parser" -> "kube")),
-      (2, json, Map("fluentbit.io/parser" -> "json"))
-    ).toDF("id", "raw", "annotations")
-      .withColumn("kubernetes", struct(col("annotations")))
-    val out = Enrich.annotationParser(df, "raw",
-      Map("kube" -> Parsers.kubeTag, "json" -> Parsers.jsonGeneric))
-    val got = out.select("id", "parsed_by_annotation").collect()
-      .map(r => r.getInt(0) -> r.getMap[String, String](1).toMap).toMap
-    assert(got(1) == Map("pod_name" -> "web-3", "namespace_name" -> "default",
-      "container_name" -> "nginx", "docker_id" -> hex))
-    // Time_Keep off: the time key is not a record key
-    assert(got(2) == Map("log" -> "hi", "stream" -> "stdout"))
-  }
-
   test("enrich plan uses a broadcast hash join (no shuffle of the fact side)") {
     val facts = Seq((tag("web-1", "default"), 1)).toDF("tag", "v")
     val dim = Seq(("web-1_default", Map.empty[String, String], Map.empty[String, String]))

@@ -54,27 +54,16 @@ class LocalSourcesSpec extends AnyFunSuite {
     assert(r.getString(1).endsWith("c.bin"))
   }
 
-  test("head Split_line: map record {line0..lineN} (in_head.c:199-244)") {
-    val dir = Files.createTempDirectory("graft-heads").toString
-    mkFile(dir, "s.log", "a\nb\nc\n")
-    val m = HeadSource.splitLines(spark, s"$dir/*.log", "h", lines = 2)
-      .select("record").collect()(0).getMap[String, String](0).toMap
-    assert(m == Map("line0" -> "a", "line1" -> "b"))
-  }
-
   test("file globs expand once: no metadata-probe WARN, PATH_NOT_FOUND on no match, literal names") {
     import org.apache.logging.log4j.core.LogEvent
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    import graft.sources.TailSource
     val dir = Files.createTempDirectory("graft-headglob").toString
     mkFile(dir, "a.log", "l1\nl2\n")
     mkFile(dir, "b[1].log", "m1\n")
     val reads: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
       "head lines" -> (g => HeadSource(spark, g, "h", lines = 1)),
-      "head bytes" -> (g => HeadSource(spark, g, "h", bytes = 2)),
-      "head Split_line" -> (g => HeadSource.splitLines(spark, g, "h", lines = 1)),
-      "tail numbered" -> (g => TailSource.linesNumbered(spark, g, "t")))
+      "head bytes" -> (g => HeadSource(spark, g, "h", bytes = 2)))
     // Spark's metadata probe of a literal glob warns through its
     // FileStreamSink logger, which the root logger's config serves
     val root = org.apache.logging.log4j.core.LoggerContext.getContext(false)

@@ -57,6 +57,26 @@ class NetworkSourcesSpec extends AnyFunSuite {
     } finally l.close()
   }
 
+  test("a connection over maxConnBytes is dropped whole; the others drain") {
+    val l = NetworkSources.listen(maxConnBytes = 64)
+    try {
+      val big = Array.fill[Byte](100)('a')
+      val small = Array.fill[Byte](10)('b')
+      val s1 = new java.net.Socket("127.0.0.1", l.port)
+      s1.getOutputStream.write(big)
+      s1.getOutputStream.flush()
+      // the listener closes a dropped connection: wait for that (EOF or a
+      // reset), so the drain below cannot run before the drop
+      s1.setSoTimeout(10000)
+      scala.util.Try(s1.getInputStream.read())
+      s1.close()
+      val s2 = new java.net.Socket("127.0.0.1", l.port)
+      s2.getOutputStream.write(small)
+      s2.close()
+      assert(l.drainUntilQuiet().map(_.toSeq) == Seq(small.toSeq))
+    } finally l.close()
+  }
+
   test("syslog over UDP: one datagram = one record") {
     val l = NetworkSources.listenUdp()
     try {

@@ -41,16 +41,4 @@ class PackingSpec extends AnyFunSuite {
     }
     assert(single.isEmpty, single)
   }
-
-  test("chunkMembers: one row per overlapped window, count = last-first+1 summed") {
-    val df = Seq((1L, 100L), (2L, 100L), (3L, 500L), (4L, 10L)).toDF("id", "n")
-    val spans = Packing.packedSpans(df, "id", "n", ctxLen = 128, sepTokens = 0, buckets = 2)
-      .as[(Long, Long, Long, Long)].collect()
-    val expected = spans.map { case (_, _, f, l) => l - f + 1 }.sum
-    val members = Packing.chunkMembers(df, "id", "n", ctxLen = 128, sepTokens = 0, buckets = 2)
-    assert(members.count() == expected)
-    // doc 3 (500 tokens from offset 200) overlaps windows 1..5
-    val d3 = members.filter(col("id") === 3L).select("chunk_id").as[Long].collect().sorted
-    assert(d3.sameElements(Array(1L, 2L, 3L, 4L, 5L)))
-  }
 }

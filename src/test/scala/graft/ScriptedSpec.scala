@@ -33,7 +33,6 @@ class ScriptedSpec extends AnyFunSuite {
     }
     val table = new ParquetSnapshotTable(ledger)
     assert(table.snapshots.map(_.id) == Seq(0L, 1L, 2L))
-    assert(table.snapshotsSince(0L).map(_.id) == Seq(1L, 2L)) // incremental scan
     assert(table.read(spark, table.snapshots(1)).count() == 10)
   }
 }

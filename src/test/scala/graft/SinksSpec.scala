@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.Sinks
 
-/** Sink-side operator semantics (kafka topic selection, the ES index
-  * name, counter/flowcounter aggregates). The byte-exact line and payload
-  * formats are pinned in FileFormatSpec.
+/** Sink-side operator semantics (kafka topic selection, the counter and
+  * flowcounter aggregates of the fb_route_fanout and fb_flowcounter
+  * queries). The byte-exact line and payload formats are pinned in
+  * FileFormatSpec.
   */
 class SinksSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -20,32 +21,40 @@ class SinksSpec extends AnyFunSuite {
   ).toDF("sink", "id", "n_tok", "topic")
 
   test("counter: per-sink count + sum(n_tok) (out_counter.c:58-84)") {
-    val got = Sinks.counter(df).as[(String, Long, Long)].collect().toSet
-    assert(got == Set(("app.a", 2L, 8L), ("db.b", 1L, 7L)))
+    // the fb_route_fanout query: fan-out over every matching sink, then a
+    // per-sink count and token sum, against a model of TokenTable's rows
+    val dir = java.nio.file.Files.createTempDirectory("graft-counter").toString
+    spark.range(0, 100).select(col("id").as("doc_id")).write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("fb_route_fanout")(spark, dir)
+      .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    // doc i: source bucket i % 100 (i < 100 here), n_tok = 1 + i % 64
+    val rows = (0L until 100L).map(i => (i, 1L + i % 64))
+    def agg(keep: Long => Boolean) = {
+      val kept = rows.filter(r => keep(r._1))
+      (kept.size.toLong, kept.map(_._2).sum)
+    }
+    assert(got == Map(
+      "sink_app" -> agg(_ < 80), "sink_db" -> agg(r => r >= 80 && r < 92),
+      "sink_kube" -> agg(r => r >= 92 && r < 97), "sink_all" -> agg(_ => true)))
   }
 
   test("flowcounter: tumbling unit buckets (out_flowcounter.c:106-130)") {
-    val ev = Seq(
+    val dir = java.nio.file.Files.createTempDirectory("graft-flowcounter").toString
+    Seq(
       (java.sql.Timestamp.valueOf("2017-07-17 20:05:00"), 10.0),
       (java.sql.Timestamp.valueOf("2017-07-17 20:59:59"), 20.0),
       (java.sql.Timestamp.valueOf("2017-07-17 21:00:00"), 30.0)
-    ).toDF("ts", "bytes")
-    val got = Sinks.flowCounter(ev, "ts", "hour", Some("bytes"))
+    ).toDF("ts", "value").write.parquet(s"$dir/events.parquet")
+    val got = SparkEntry.queries("fb_flowcounter")(spark, dir)
       .orderBy("wstart").collect()
     assert(got.length == 2)
-    assert(got(0).getLong(1) == 2 && got(0).getDouble(2) == 30.0)
-    assert(got(1).getLong(1) == 1 && got(1).getDouble(2) == 30.0)
+    assert(got(0).getLong(1) == 2 && got(0).getLong(2) == 3000L)
+    assert(got(1).getLong(1) == 1 && got(1).getLong(2) == 3000L)
   }
 
   test("kafka topic selection: Topic_Key value else default (kafka.c:104-133)") {
     val got = df.select(col("id"), Sinks.kafkaTopic(col("topic"), "logs").as("t"))
       .as[(Long, String)].collect().toMap
     assert(got == Map(1L -> "x", 2L -> "y", 3L -> "logs"))
-  }
-
-  test("ES logstash daily index (es.c:245-266)") {
-    val idx = Seq(java.sql.Timestamp.valueOf("2017-07-17 20:17:03")).toDF("ts")
-      .select(Sinks.esLogstashIndex(col("ts"), "logstash")).as[String].collect()(0)
-    assert(idx == "logstash-2017.07.17")
   }
 }

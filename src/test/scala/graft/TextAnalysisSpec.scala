@@ -72,16 +72,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(composable.exceptAll(fused).isEmpty && fused.exceptAll(composable).isEmpty)
   }
 
-  test("qualityScore is in [0,1] and rewards stopword-bearing prose") {
-    val df = Seq(
-      "the cat is on the mat and the dog is in the yard", // prose-like
-      "zzzzzzzzzzzz qqqqqqqqq xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx" // junk
-    ).toDF("t")
-    val got = df.select(TextAnalysis.qualityScore(col("t")).as("q")).as[Double].collect()
-    assert(got.forall(q => q >= 0.0 && q <= 1.0))
-    assert(got(0) > got(1))
-  }
-
   test("normalize + redact: punctuation/whitespace/case cleaned; emails and IPs masked") {
     val got = Seq("  Hello,  WORLD!  ping me: a.b+c@ex.co or 192.168.0.1 ok ")
       .toDF("t")
@@ -101,7 +91,7 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("hash sampling: deterministic, ~pct kept, complement exactly disjoint") {
     val d = spark.range(0, 10000).toDF("id")
-    val kept = graft.operators.Sampling.hashSample(d, "id", 10)
+    val kept = graft.operators.Sampling.samplePortable(d, "id", 10)
     val n = kept.count()
     assert(n > 800 && n < 1200, s"kept $n of 10000 at 10%")
     assert(kept.count() == n) // deterministic re-run
